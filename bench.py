@@ -27,6 +27,11 @@ Methodology (documented because it changed in round 2):
   not the stall lottery.  The cold (first-run) total is reported
   alongside as ``value_cold``/``queries_cold`` for comparability with
   the round-1 single-shot numbers.
+- Generated-code compiles (Spark's ``CodegenMetrics`` count) are
+  recorded next to the times: ``codegen_compiles`` on the line is the
+  total over the key loop, and ``compiles`` in the detail file maps each
+  key to [first run, second run]; a nonzero second run means the key
+  recompiled classes it had already compiled.
 """
 
 from __future__ import annotations
@@ -44,7 +49,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
-    from pfithic_spark.session import get_spark
+    from pfithic_spark.session import codegen_compiles, get_spark
     import __spark_entry__ as e
 
     # Host-load snapshot (VERDICT r6 #6): round-over-round comparisons
@@ -84,16 +89,24 @@ def main() -> None:
         .collect()
     )
 
+    compiles: dict[str, list[int]] = {}
+
     def run_once(key: str) -> float:
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
-        df = queries[key](spark, SF_DIR)
-        # noop sink: materializes EVERY output column (count() would let
-        # Catalyst prune expensive projections out of the measured plan)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        try:
+            df = queries[key](spark, SF_DIR)
+            # noop sink: materializes EVERY output column (count() would
+            # let Catalyst prune expensive projections out of the
+            # measured plan)
+            df.write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
+        finally:
+            compiles.setdefault(key, []).append(codegen_compiles(spark) - c0)
 
     cold: dict[str, float] = {}
     best: dict[str, float] = {}
+    compiles_start = codegen_compiles(spark)
     for key in sorted(queries):
         try:
             t1 = run_once(key)
@@ -117,6 +130,7 @@ def main() -> None:
         # drop cached blocks a key pinned so later keys aren't measured
         # under accumulated memory/GC pressure from earlier ones
         spark.catalog.clearCache()
+    n_compiles = codegen_compiles(spark) - compiles_start
     total = round(sum(t for t in best.values() if t >= 0), 4)
     total_cold = round(sum(t for t in cold.values() if t >= 0), 4)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
@@ -149,6 +163,7 @@ def main() -> None:
             else ("idle" if load_before[0] < 1.0 else "loaded")
         ),
         "detail_file": "BENCH_DETAIL.json",
+        "codegen_compiles": n_compiles,
     }
     # Per-query visibility for the driver's PERF comparator (round 14,
     # VERDICT r13 "what's wrong" #1 / task 2): PERF_r13.per_query was
@@ -178,7 +193,7 @@ def main() -> None:
     # json-parses the FINAL line, so that line must stay compact
     # (round 2's single giant line overflowed the buffer and parsed
     # as null).  Full breakdown is committed alongside.
-    detail = dict(summary, queries=best, queries_cold=cold)
+    detail = dict(summary, queries=best, queries_cold=cold, compiles=compiles)
     detail.pop("detail_file")
     detail.pop("queries_in_line", None)
     with open(os.path.join(REPO_ROOT, "BENCH_DETAIL.json"), "w") as fh:

@@ -56,7 +56,11 @@ def run_pipeline_files(
     the per-bin denominators.  Works unchanged for fragment mode
     (cfg.resolution == 0, variable restriction-fragment midpoints).
 
-    Returns the significances DataFrame (already written)."""
+    Returns the significances DataFrame, already written and persisted:
+    the writes and any later actions on it read the cached table instead
+    of re-running the final BH-FDR pass.  The pipeline's intermediate
+    caches are released before returning; the caller owns the returned
+    table and may ``unpersist()`` it when done."""
     contacts = pio.read_contacts_tsv(spark, contacts_path)
     biases = pio.read_biases_tsv(spark, biases_path) if biases_path else None
 
@@ -84,6 +88,7 @@ def run_pipeline_files(
         )
 
     bin_stats: list = []
+    caches: list = []
     sig = run_significance(
         spark,
         contacts,
@@ -91,10 +96,17 @@ def run_pipeline_files(
         cfg=cfg,
         fragments=good,
         bin_stats_out=bin_stats,
-    )
+        caches_out=caches,
+    ).persist()
+    # the parquet twin fills sig's cache; the ordered TSV then sorts the
+    # cached rows
+    pio.write_parquet(sig, f"{out_dir}/significances.parquet")
     ordered = sig.orderBy("q_value", "p_value", "chr1", "mid1", "chr2", "mid2")
     pio.write_tsv_gz(ordered, f"{out_dir}/significances.tsv.gz")
-    pio.write_parquet(sig, f"{out_dir}/significances.parquet")
+    # sig's cache is fully loaded, so dropping the caches its lineage
+    # reads leaves it in place
+    for df in caches:
+        df.unpersist()
     # per-pass bin-stats files (reference: {lib}.fithic_pass{n}.txt) —
     # already driver-side pandas (≤ n_bins rows per pass)
     import os

@@ -454,6 +454,7 @@ def run_significance(
     cfg: SigConfig | None = None,
     fragments: DataFrame | None = None,
     bin_stats_out: list | None = None,
+    caches_out: list | None = None,
 ) -> DataFrame:
     """Full multi-pass significance pipeline; returns the scored
     contacts (chr1, mid1, chr2, mid2, contact_count, p_value, q_value,
@@ -475,7 +476,13 @@ def run_significance(
     ``bin_stats_out``: optional list; when given, (pass_no, pandas
     bin-stats table) is appended per intra fit — the reference's
     per-pass ``fithic_pass{n}.txt`` support table (already driver-side:
-    ≤ n_bins rows)."""
+    ≤ n_bins rows).
+
+    ``caches_out``: optional list; when given, every DataFrame this
+    function leaves persisted (the repartitioned intra contacts, the
+    final pass's scored table, and the res=0 census or the inter
+    contacts when used) is appended, so the caller can unpersist them
+    once it has materialized the result.  Without it they stay cached."""
     cfg = cfg or SigConfig()
     if fragments is None and chr_nbins is None:
         raise ValueError("provide fragments or chr_nbins for the census")
@@ -499,6 +506,7 @@ def run_significance(
     # onto a single Python worker
     par = spark.sparkContext.defaultParallelism or 32
     c = intra.repartition(par, "chr1", "mid1").cache()
+    kept = [c]
     # possible-pair census from the actual fragment set:
     # - fixed resolution: per-chromosome occupancy autocorrelation —
     #   collect bounded by genome/resolution, no pair join at all;
@@ -521,6 +529,7 @@ def run_significance(
             possible_df = possible_pairs_from_fragments(
                 fragments, cfg.dist_lo, cfg.dist_hi
             ).cache()
+            kept.append(possible_df)
             p_dists = p_counts = None
             m_possible = int(
                 possible_df.agg(F.sum("n_possible")).collect()[0][0] or 0
@@ -568,6 +577,7 @@ def run_significance(
             (nb.sum() ** 2 - (nb**2).sum()) // 2
         )  # Σ_{c1<c2} n1·n2
         inter = inter.cache()
+        kept.append(inter)
         n_inter = inter.agg(F.sum("contact_count")).collect()[0][0] or 0
         inter_prob = n_inter / possible_inter if possible_inter else 0.0
         prior = contact_prior(
@@ -668,6 +678,8 @@ def run_significance(
                 "left_anti",
             )
             prev_combined, prev_outliers = combined, outliers
+    if caches_out is not None:
+        caches_out.extend(kept + [combined])
     return scored.select(
         "chr1",
         "mid1",

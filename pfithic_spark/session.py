@@ -10,6 +10,14 @@ matches the (UTC-naive) DuckDB oracle.
 ``events`` table (parquet TIMESTAMP(NANOS) — Spark has no nanosecond
 timestamp type); it is a runtime SQL conf, so :func:`ensure_engine_confs`
 can also be applied to an externally provided session (the driver's).
+
+The generated-code cache is sized by :data:`CODEGEN_CACHE_ENTRIES`
+(``spark.sql.codegen.cache.maxEntries``).  That is a static SQL conf: it
+only takes effect when the session is built, so :func:`get_spark` sets it
+and :func:`ensure_engine_confs` cannot.  A session built elsewhere (one
+handed to ``__spark_entry__``, a notebook's) keeps Spark's default of 100
+entries, which is smaller than one Hi-C run's working set, and recompiles
+generated classes on every repeated run.
 """
 
 from __future__ import annotations
@@ -39,7 +47,34 @@ RUNTIME_CONFS = {
     # build bounded; skew handling stays with AQE skewJoin.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64MB",
+    # Generated class names carry no codegen stage id, so a stage's
+    # source no longer depends on the order in which AQE happens to
+    # re-plan sibling query stages.  With ids, q_theil_index's two
+    # broadcast branches swap stage ids 8 and 9 from run to run, and
+    # every swap misses the codegen cache (4 recompiles at runs 2 or 7
+    # of 8 at sf0.001; 0 after run 1 without ids).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+#: Entries of Spark's generated-class cache (static; set at build time).
+#: Spark keys the cache on (classloader, source), so a driver-side and a
+#: task-side compile of one source take two entries: a cold Hi-C CLI run
+#: (perfbench hic_cli) compiles 93 classes and the registry_overhead
+#: basket 114, against Spark's default cap of 100.  Warm-round compiles
+#: by cap, local[2], 8 rounds: 100 -> 18 a round (hic_cli) and 23-47
+#: (basket); 150 -> 0 and 4-18; 250 and 500 -> 0 and 0, apart from
+#: first-time plans (q_knn_graph's second run, q_anomaly_zscore's fifth).
+#: 1000 leaves 4x headroom over 250 for sessions that run several
+#: workloads; Metaspace stays at 159-161 MB from 100 to 1000.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -123,6 +158,7 @@ def get_spark(
         # would null the whole bench run (VERDICT r4).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -141,9 +141,15 @@ def test_run_pipeline_files_end_to_end(spark, tmp_path):
             f.write(f"chr1\t{i*5000+2500}\tchr1\t{j*5000+2500}\t{cc}\n")
     out = tmp_path / "out"
     cfg = SigConfig(n_bins=20, passes=1)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     sig = run_pipeline_files(spark, str(src), None, None, str(out), cfg)
     pdf = sig.toPandas()
     assert len(pdf) > 0
+    # the returned table is the only cache the pipeline leaves behind
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+    sig.unpersist()
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
     assert ((pdf["p_value"] >= 0) & (pdf["p_value"] <= 1)).all()
     assert (out / "significances.parquet").exists()
     assert (out / "significances.tsv.gz").exists()
@@ -968,7 +974,9 @@ def test_optimize_then_vacuum_keeps_referenced_files(spark, tmp_path):
 
     path = str(tmp_path / "opt_vac")
     write_parquet_atomic(
-        spark.range(10).withColumnRenamed("id", "v").repartition(5),
+        # five input partitions of two rows each: five files at any core
+        # count (repartition(5) can leave a partition empty)
+        spark.range(0, 10, 1, 5).withColumnRenamed("id", "v"),
         path,
         mode="overwrite",
     )
