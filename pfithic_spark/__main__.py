@@ -29,6 +29,8 @@ def main() -> None:
     ap.add_argument("-U", "--dist-up", type=int, default=2**62)
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from .api import run_pipeline_files
     from .hic import SigConfig
     from .session import get_spark
@@ -50,8 +52,9 @@ def main() -> None:
         args.outdir,
         cfg,
     )
-    n = sig.count()
-    q05 = sig.filter("q_value < 0.05").count()
+    n, q05 = sig.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("q_value") < 0.05, 1))
+    ).collect()[0]
     print(f"scored {n} contacts → {args.outdir} ({q05} with q<0.05)")
     spark.stop()
 

@@ -19,16 +19,6 @@ from .hic import SigConfig, kr_biases, run_significance
 from .relational import remove_bad_fragments
 
 
-def chr_nbins_from_fragments(fragments: DataFrame, resolution: int) -> DataFrame:
-    """Grid size per chromosome from the fragment universe
-    (ref: generate_FragPairs builds the same census)."""
-    return fragments.groupBy("chr").agg(
-        (F.floor(F.max("frag_mid") / F.lit(resolution)) + 1)
-        .cast("int")
-        .alias("nbins")
-    )
-
-
 def bad_fragments(fragments: DataFrame) -> DataFrame:
     """badFrags: unmappable or zero-marginal loci
     (ref: generate_FragPairs filter)."""

@@ -15,13 +15,22 @@ Dataflow per pass:
         ├─ p = P(X ≥ cc | N, prior)  (Arrow pandas_udf, numpy betainc)
         └─ BH-FDR with M = possibleIntraInRangeCount  [SC-3]
 
-Pass n>1 anti-joins out pass-(n−1) significant outliers (q < threshold)
-before refitting the null [SC-7], then re-scores ALL contacts against
-the refined curve.
+Refinement [SC-7]: a non-final pass needs only the SET of its
+outliers (q < outlier_q), not every row's q-value.  For outlier_q ≤ 1
+every outlier has p < outlier_q·n/M, and those rows are a prefix of
+BH's global order, so the pass collects just that candidate prefix and
+finds BH's cut-off rank k* on the driver.  Every pass scores all
+contacts, and the next one fits the per-distance table of all contacts
+(aggregated once) minus this pass's intra outliers' (cc, 1) per
+distance.  No global rank and no join of contact rows run before the
+final pass, which alone runs the full BH its output needs.
 
-Scale notes: the only driver materialization is the ≤noOfBins bin table
-(SURVEY.md §1.2 sanctioned sync point); the curve returns to executors
-as a broadcast variable consumed by an Arrow-batched pandas_udf; every
+Scale notes: the driver materializations are the per-distance table
+(≤ genome/resolution rows; res=0 keeps it distributed), the ≤noOfBins
+bin table (SURVEY.md §1.2 sanctioned sync point) and a refinement
+pass's candidate prefix (≤ OUTLIER_CANDIDATE_CAP rows, else that pass
+runs the distributed BH); the curve returns to executors as a
+broadcast variable consumed by an Arrow-batched pandas_udf; every
 global-order step routes through windows.scalable_cumsum.
 """
 
@@ -159,9 +168,8 @@ def possible_pairs_grid_census(
         fragments.select(
             "chr", F.floor(F.col("mid") / resolution).cast("long").alias("bin")
         )
-        .distinct()
         .groupBy("chr")
-        .agg(F.collect_list("bin").alias("bins"))
+        .agg(F.collect_set("bin").alias("bins"))
         .collect()
     )
     counts: dict[int, int] = {}
@@ -276,12 +284,16 @@ def _fused_score_udf(spark: SparkSession, gx, gy, n_total: int):
             st.binom_sf_ge(cc.to_numpy(dtype=np.float64), n, prior)
         )
 
-    return score
+    # nondeterministic only to the optimizer: a filter on p_value would
+    # otherwise be pushed below the projection with the UDF inlined into
+    # it, and the UDF would run twice (once for the filter, once for the
+    # column).  The function itself is deterministic.
+    return score.asNondeterministic()
 
 
 def fit_null_curve(
     spark: SparkSession,
-    in_range: DataFrame,
+    byd,
     n_total: int | None,
     possible_by_dist,
     cfg: SigConfig,
@@ -289,8 +301,9 @@ def fit_null_curve(
     """Equal-occupancy binning → per-bin contact probability → monotone
     curve (SC-1 probability: (Σcc_bin / possible_bin) / N).
 
-    The cluster's only job here is the per-distance pre-compression
-    ``groupBy(dist)`` — its output cardinality is bounded by
+    ``byd``: the per-distance table (d, cc, np) of the in-range intra
+    contacts (:func:`windows.per_distance_totals`), as a pandas frame
+    or a Spark DataFrame this collects.  Its cardinality is bounded by
     genome_length/resolution (data-size INDEPENDENT: ~10⁵–10⁶ rows at
     1 kb on a human genome), so the binning + bin stats run driver-side
     in numpy on the collected table.  This is the §1.2 sanctioned sync
@@ -301,10 +314,11 @@ def fit_null_curve(
     ``possible_by_dist``: (dists, n_possible) numpy arrays from
     :func:`possible_pairs_np`, or a (dist, n_possible) DataFrame.
     ``n_total``: binomial N (observedIntraInRangeSum); pass None on the
-    first pass to derive it from this same collect — Σcc over the
+    first pass to derive it from this same table — Σcc over the
     per-distance table IS the in-range sum, so no separate agg job.
     Returns (pandas bin-stats table, (grid_x, grid_y), (Σcc, Σpairs))."""
-    byd = win.per_distance_totals(in_range).toPandas()
+    if isinstance(byd, DataFrame):
+        byd = byd.toPandas()
     byd = byd.sort_values("d", ignore_index=True)
     d = byd["d"].to_numpy(dtype=np.int64)
     cc = byd["cc"].to_numpy(dtype=np.int64)
@@ -383,7 +397,7 @@ def fit_null_curve(
 
 def fit_null_curve_distributed(
     spark: SparkSession,
-    in_range: DataFrame,
+    byd: DataFrame,
     n_total: int | None,
     possible_df: DataFrame | None,
     cfg: SigConfig,
@@ -397,12 +411,12 @@ def fit_null_curve_distributed(
     assignment, exact integer bin sums — but the binning runs through
     windows.equal_occupancy_assign (two-phase cumsum, no single-task
     window) and the ONLY driver materializations are the ≤ n_bins bin
-    table and two scalar aggregates.  ``possible_df``: (dist,
-    n_possible) DataFrame (e.g. possible_pairs_from_fragments), joined
-    distributed; distances absent from it fall back to the observed
-    pair count, matching the driver-side form.
+    table and two scalar aggregates.  ``byd``: the per-distance table
+    (d, cc, np) as a DataFrame.  ``possible_df``: (dist, n_possible)
+    DataFrame (e.g. possible_pairs_from_fragments), joined distributed;
+    distances absent from it fall back to the observed pair count,
+    matching the driver-side form.
     """
-    byd = win.per_distance_totals(in_range)
     if possible_df is not None:
         p = possible_df.select(F.col("dist").alias("d"), "n_possible")
         byd = byd.join(p, "d", "left").withColumn(
@@ -446,6 +460,123 @@ def fit_null_curve_distributed(
     return pdf, (gx, gy), (total, int(pdf["n_pairs"].sum()))
 
 
+#: most candidate rows (p < outlier_q·n/M) a refinement pass collects to
+#: pick its outliers on the driver; above it the pass ranks every row
+#: with the distributed BH instead
+OUTLIER_CANDIDATE_CAP = 1_000_000
+
+
+def _outlier_cols() -> list:
+    """What a refinement pass keeps of each outlier: enough to take it
+    out of the per-distance table."""
+    return [
+        "dist",
+        "contact_count",
+        "p_value",
+        (F.col("chr1") == F.col("chr2")).alias("is_intra"),
+    ]
+
+
+def bh_outlier_count(p_sorted: np.ndarray, m: int, alpha: float) -> int:
+    """BH's cut-off rank k* = max{j : min(1, p_(j)·M/j) < α} over
+    ascending p-values, 0 when no j qualifies.
+
+    For α ≤ 1 the ranks 1..k* are exactly the rows :func:`windows.bh_fdr`
+    gives q < α: q_(i) is the min over j ≥ i of the same term.  The term
+    is the same IEEE expression, (p·M)/j, so the cut-off agrees to the
+    bit.  Tied p-values share one q, so the set does not depend on the
+    tiebreak order."""
+    j = np.arange(1, len(p_sorted) + 1, dtype=np.float64)
+    q_raw = np.minimum(1.0, p_sorted * float(m) / j)
+    hit = np.flatnonzero(q_raw < alpha)
+    return int(hit[-1]) + 1 if hit.size else 0
+
+
+def _bh_outliers(combined: DataFrame, n: int, m: int, alpha: float):
+    """The rows of ``combined`` (n scored rows) whose BH q-value with
+    M = ``m`` is < ``alpha``, as a pandas frame of :func:`_outlier_cols`;
+    None when more than :data:`OUTLIER_CANDIDATE_CAP` rows are
+    candidates.
+
+    Every rank j ≤ k* has p_(j) < α·j/M ≤ α·n/M, so only rows under that
+    bound can be outliers, and they are a prefix of the global (p,
+    tiebreak) order: a candidate's rank among the candidates is its
+    global rank.  The bound is padded so that float rounding cannot drop
+    a true candidate; extra candidates fall past k*."""
+    bound = alpha * n / m * (1.0 + 1e-12) if m else math.inf
+    cand = combined.filter(F.col("p_value") < F.lit(bound)).select(
+        *_outlier_cols()
+    )
+    # at most n rows can come back, so the limit is planned only when n
+    # is over the cap (its CollectLimit stage also recompiles its
+    # generated class on every run)
+    if n > OUTLIER_CANDIDATE_CAP:
+        cand = cand.limit(OUTLIER_CANDIDATE_CAP + 1)
+    cand = cand.toPandas()
+    if len(cand) > OUTLIER_CANDIDATE_CAP:
+        return None
+    cand = cand.sort_values("p_value", kind="stable", ignore_index=True)
+    k = bh_outlier_count(cand["p_value"].to_numpy(dtype=np.float64), m, alpha)
+    return cand.iloc[:k]
+
+
+def _minus_outliers(byd, out_byd):
+    """The next pass's per-distance table: ``byd`` (all scored intra
+    contacts) minus the intra outliers' per-distance (cc, np)
+    ``out_byd``, in exact int64.  Distances left with no pair are
+    dropped, as a groupBy over the remaining contacts would.  pandas in,
+    pandas out; a DataFrame ``byd`` (res=0) is subtracted distributed."""
+    if isinstance(byd, DataFrame):
+        if not isinstance(out_byd, DataFrame):
+            out_byd = F.broadcast(
+                byd.sparkSession.createDataFrame(
+                    out_byd, "d long, cc long, np long"
+                )
+            )
+        o = out_byd.select(
+            "d", F.col("cc").alias("_occ"), F.col("np").alias("_onp")
+        )
+        return (
+            byd.join(o, "d", "left")
+            .select(
+                "d",
+                (F.col("cc") - F.coalesce(F.col("_occ"), F.lit(0))).alias("cc"),
+                (F.col("np") - F.coalesce(F.col("_onp"), F.lit(0))).alias("np"),
+            )
+            .filter(F.col("np") > 0)
+        )
+    d = byd["d"].to_numpy(dtype=np.int64)
+    cc = byd["cc"].to_numpy(dtype=np.int64).copy()
+    npairs = byd["np"].to_numpy(dtype=np.int64).copy()
+    pos = np.searchsorted(d, out_byd["d"].to_numpy(dtype=np.int64))
+    np.subtract.at(cc, pos, out_byd["cc"].to_numpy(dtype=np.int64))
+    np.subtract.at(npairs, pos, out_byd["np"].to_numpy(dtype=np.int64))
+    keep = npairs > 0
+    return pd.DataFrame({"d": d[keep], "cc": cc[keep], "np": npairs[keep]})
+
+
+def _per_distance_np(outliers: pd.DataFrame) -> pd.DataFrame:
+    """Driver twin of :func:`windows.per_distance_totals` over the intra
+    rows of a collected outlier frame: (d, cc, np), exact int64."""
+    intra = outliers[outliers["is_intra"]]
+    return (
+        intra.groupby("dist", sort=True)["contact_count"]
+        .agg(cc="sum", np="size")
+        .reset_index()
+        .rename(columns={"dist": "d"})
+        .astype(np.int64)
+    )
+
+
+def _bh(combined: DataFrame, m: int, n_rows, n_exact) -> DataFrame:
+    """BH-FDR q-values over every scored row (the final pass, and a
+    refinement pass over the candidate cap)."""
+    tiebreak = ["chr1", "chr2", "mid1", "mid2"]
+    if (n_rows or 0) > 200_000:
+        return win.bh_fdr_scalable(combined, "p_value", m=m, tiebreak=tiebreak)
+    return win.bh_fdr(combined, "p_value", m=m, tiebreak=tiebreak, n_rows=n_exact)
+
+
 def run_significance(
     spark: SparkSession,
     contacts: DataFrame,
@@ -455,6 +586,7 @@ def run_significance(
     fragments: DataFrame | None = None,
     bin_stats_out: list | None = None,
     caches_out: list | None = None,
+    outliers_out: list | None = None,
 ) -> DataFrame:
     """Full multi-pass significance pipeline; returns the scored
     contacts (chr1, mid1, chr2, mid2, contact_count, p_value, q_value,
@@ -478,11 +610,17 @@ def run_significance(
     per-pass ``fithic_pass{n}.txt`` support table (already driver-side:
     ≤ n_bins rows).
 
+    ``outliers_out``: optional list; when given, (pass_no, pandas frame
+    of dist, contact_count, p_value, is_intra) is appended per
+    refinement pass: the outliers that pass removes from the next fit.
+    Over the candidate cap this costs one extra collect.
+
     ``caches_out``: optional list; when given, every DataFrame this
     function leaves persisted (the repartitioned intra contacts, the
     final pass's scored table, and the res=0 census or the inter
     contacts when used) is appended, so the caller can unpersist them
-    once it has materialized the result.  Without it they stay cached."""
+    once it has materialized the result.  Without it they stay cached.
+    Refinement passes leave nothing cached."""
     cfg = cfg or SigConfig()
     if fragments is None and chr_nbins is None:
         raise ValueError("provide fragments or chr_nbins for the census")
@@ -565,11 +703,12 @@ def run_significance(
         )
     possible = (p_dists, p_counts)
     # global scalars (N = observedIntraInRangeSum, row count) come out of
-    # pass 0's per-distance collect below — no separate agg job
+    # pass 0's per-distance table below — no separate agg job
     n_rows = n_total = None
 
     inter_scored = None
     m_total = 0
+    n_inter_rows = 0
     if score_inter:
         # flat inter-chromosomal null [SC-5]: interChrProb =
         # observedInterAllSum / possibleInterAllCount; N = inter sum
@@ -578,7 +717,10 @@ def run_significance(
         )  # Σ_{c1<c2} n1·n2
         inter = inter.cache()
         kept.append(inter)
-        n_inter = inter.agg(F.sum("contact_count")).collect()[0][0] or 0
+        n_inter, n_inter_rows = inter.agg(
+            F.sum("contact_count"), F.count(F.lit(1))
+        ).collect()[0]
+        n_inter = n_inter or 0
         inter_prob = n_inter / possible_inter if possible_inter else 0.0
         prior = contact_prior(
             None, F.lit(float(inter_prob)), F.col("bias1"), F.col("bias2")
@@ -589,37 +731,38 @@ def run_significance(
         )
         m_total += possible_inter
 
-    fit_input = c
+    # the per-distance table (d, cc, np) of c, aggregated once
+    # (collected for driver binning, a DataFrame for res=0).  Every pass
+    # scores all of c, and the next pass fits c minus this pass's
+    # outliers: byd0 minus their (cc, 1) per distance.
+    byd0 = byd = None
+    if score_intra:
+        byd0 = win.per_distance_totals(c)
+        if possible_df is None:
+            byd0 = byd0.toPandas().sort_values("d", ignore_index=True)
+        byd = byd0
     scored = None
-    prev_combined = prev_outliers = None
     n_passes = max(1, cfg.passes)
     for pass_no in range(n_passes):
+        final = pass_no == n_passes - 1
+        if not score_intra and not final:
+            continue  # no intra fit to refine: every pass scores alike
         if score_intra:
             if possible_df is not None:
                 # res=0: distributed binning — only the ≤ n_bins bin
                 # table reaches the driver
                 bin_pdf, (gx, gy), (fit_cc, fit_np) = (
                     fit_null_curve_distributed(
-                        spark, fit_input, n_total, possible_df, cfg
+                        spark, byd, n_total, possible_df, cfg
                     )
                 )
             else:
                 bin_pdf, (gx, gy), (fit_cc, fit_np) = fit_null_curve(
-                    spark, fit_input, n_total, possible, cfg
+                    spark, byd, n_total, possible, cfg
                 )
             if bin_stats_out is not None:
                 bin_stats_out.append((pass_no, bin_pdf))
-        # the fit collect just materialized this pass's fit_input, so the
-        # PREVIOUS pass's cached scored table + outlier set are dead —
-        # release them instead of accumulating one pair per pass
-        if prev_combined is not None:
-            prev_combined.unpersist()
-            prev_combined = None
-        if prev_outliers is not None:
-            prev_outliers.unpersist()
-            prev_outliers = None
-        if score_intra:
-            if n_total is None:  # pass 0: fit_input == c, so Σcc == N
+            if n_total is None:  # pass 0: byd0 covers all of c, so Σcc == N
                 n_total, n_rows = fit_cc, fit_np
                 m_possible = m_possible or n_rows
             score = _fused_score_udf(spark, gx, gy, int(n_total))
@@ -638,46 +781,53 @@ def run_significance(
         for p in parts[1:]:
             combined = combined.unionByName(p)
         m_bh = (int(m_possible) if score_intra else 0) + m_total
-        # materialize the scored table before BH: the distributed BH's
-        # range repartition SAMPLES its input, which would re-run the
-        # whole scoring UDF lineage once per downstream job
-        combined = combined.cache()
-        if (n_rows or 0) > 200_000:
-            scored = win.bh_fdr_scalable(
-                combined,
-                "p_value",
-                m=m_bh,
-                tiebreak=["chr1", "chr2", "mid1", "mid2"],
+        # exact combined count known only when no inter rows were
+        # unioned in → enables the single-sort BH form
+        n_exact = n_rows if (score_intra and inter_scored is None) else None
+        if final:
+            # materialize the scored table before BH: the distributed
+            # BH's range repartition SAMPLES its input, which would re-run
+            # the whole scoring UDF lineage once per downstream job
+            combined = combined.cache()
+            scored = _bh(combined, m_bh, n_rows, n_exact)
+            break
+        # refine: remove this pass's outliers (q < outlier_q) from the
+        # next fit [SC-7]
+        outliers = None
+        if cfg.outlier_q <= 1:
+            outliers = _bh_outliers(
+                combined, n_rows + n_inter_rows, m_bh, cfg.outlier_q
             )
+        if outliers is not None:
+            out_byd = _per_distance_np(outliers)
         else:
-            scored = win.bh_fdr(
-                combined,
-                "p_value",
-                m=m_bh,
-                tiebreak=["chr1", "chr2", "mid1", "mid2"],
-                # exact combined count known only when no inter rows were
-                # unioned in → enables the single-sort BH form
-                n_rows=(
-                    n_rows if (score_intra and inter_scored is None) else None
-                ),
+            # over the candidate cap: rank every row, and keep the
+            # outliers on the cluster
+            combined = combined.cache()
+            ranked = _bh(combined, m_bh, n_rows, n_exact).filter(
+                F.col("q_value") < cfg.outlier_q
             )
-        # refine: remove significant outliers before the next fit [SC-7].
-        # Cache the (small) outlier set — its lineage contains this
-        # pass's full scoring pipeline, which the next pass's null fit
-        # would otherwise recompute per downstream job.  Skipped on the
-        # final pass: nothing consumes it.
-        if pass_no < n_passes - 1:
-            outliers = (
-                scored.filter(F.col("q_value") < cfg.outlier_q)
-                .select("chr1", "mid1", "chr2", "mid2")
-                .cache()
-            )
-            fit_input = c.join(
-                F.broadcast(outliers),
-                ["chr1", "mid1", "chr2", "mid2"],
-                "left_anti",
-            )
-            prev_combined, prev_outliers = combined, outliers
+            out_df = ranked.select(*_outlier_cols())
+            if outliers_out is not None:
+                outliers = out_df.toPandas()
+            out_byd = win.per_distance_totals(out_df.filter("is_intra"))
+            if possible_df is None:
+                # one row per outlier distance: ≤ the fit table's size
+                out_byd = out_byd.toPandas()
+        if outliers_out is not None:
+            outliers_out.append((pass_no, outliers))
+        stale = [
+            df for df in (combined, byd) if isinstance(df, DataFrame) and df.is_cached
+        ]
+        byd = _minus_outliers(byd0, out_byd)
+        if isinstance(out_byd, DataFrame):
+            # res=0 over the cap: the new table's lineage holds this
+            # pass's scoring; materialize it before that is released
+            byd.cache().count()
+        for df in stale:
+            df.unpersist()
+    if isinstance(byd, DataFrame) and byd.is_cached:
+        byd.unpersist()
     if caches_out is not None:
         caches_out.extend(kept + [combined])
     return scored.select(

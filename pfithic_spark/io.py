@@ -845,10 +845,6 @@ def _newest_manifest_meta(path: str) -> dict:
     return _newest_manifest_entry(path)[1]
 
 
-def _newest_manifest_name(path: str) -> str:
-    return _newest_manifest_entry(path)[0]
-
-
 def _newest_manifest_full(path: str) -> tuple[int, list[str], dict]:
     m = _newest_manifest_meta(path)
     return (

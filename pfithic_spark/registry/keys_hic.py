@@ -231,10 +231,10 @@ def q_spline_fit_eval(spark, sf_dir):
     possible = hic.possible_pairs_np(
         [fx.NBINS_GRID] * fx.N_CHROMS, fx.RES, cfg.dist_lo, cfg.dist_hi
     )[:2]
-    # n_total=None: N comes out of the same per-distance collect
-    _, (gx, gy), _ = hic.fit_null_curve(spark, c, None, possible, cfg)
-    eval_udf = hic._curve_eval_udf(spark, gx, gy)
     byd = win.per_distance_totals(c)
+    # n_total=None: N comes out of the same per-distance collect
+    _, (gx, gy), _ = hic.fit_null_curve(spark, byd, None, possible, cfg)
+    eval_udf = hic._curve_eval_udf(spark, gx, gy)
     return byd.select(
         "d", "cc", eval_udf(F.col("d").cast("double")).alias("spline_prob")
     )

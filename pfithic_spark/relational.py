@@ -99,35 +99,6 @@ def remove_bad_fragments(contacts: DataFrame, bad_frags: DataFrame) -> DataFrame
 # --- joins ---------------------------------------------------------------
 
 
-def attach_fragment_attrs(
-    contacts: DataFrame, fragments: DataFrame, attrs: list[str]
-) -> DataFrame:
-    """Attach per-locus attributes to both endpoints (dim × fact).
-
-    The reference does dict lookups / pandas merges per endpoint
-    [P `fithic.py::generate_FragPairs` consumers]; here: two broadcast
-    hash joins (fragments is per-locus — millions of rows at most, far
-    under broadcast threshold even for hg38 at 1 kb resolution).
-    """
-    f1 = F.broadcast(
-        fragments.select(
-            F.col("chr").alias("chr1"),
-            F.col("frag_mid").alias("mid1"),
-            *[F.col(a).alias(f"{a}_1") for a in attrs],
-        )
-    )
-    f2 = F.broadcast(
-        fragments.select(
-            F.col("chr").alias("chr2"),
-            F.col("frag_mid").alias("mid2"),
-            *[F.col(a).alias(f"{a}_2") for a in attrs],
-        )
-    )
-    return contacts.join(f1, ["chr1", "mid1"], "inner").join(
-        f2, ["chr2", "mid2"], "inner"
-    )
-
-
 def attach_biases(
     contacts: DataFrame, biases: DataFrame, default: float = 1.0
 ) -> DataFrame:

@@ -114,18 +114,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    width: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    e = with_event_time(events).withWatermark("event_time", watermark)
-    return e.groupBy(F.window("event_time", width, slide), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:

@@ -139,7 +139,7 @@ def test_kr_balance_unbalanceable_sentinel(spark):
 
 
 
-@pytest.mark.parametrize("passes", [1, 2])
+@pytest.mark.parametrize("passes", [1, 2, 3])
 def test_adversarial_canonicalization_bias_bounds_ties(spark, passes):
     """SC-2/SC-6 edge semantics, pinned against the independent pandas
     dataflow: (a) uncanonicalized + duplicated input pairs collapse into
@@ -451,3 +451,194 @@ def test_all_mode_matches_pandas_ref(spark, sf_dir):
     np.testing.assert_allclose(got["bias2"], want["bias2"], rtol=1e-12)
     np.testing.assert_allclose(got["p_value"], want["p_value"], rtol=1e-9, atol=1e-300)
     np.testing.assert_allclose(got["q_value"], want["q_value"], rtol=1e-9, atol=1e-300)
+
+
+_KEYS = ["chr1", "mid1", "chr2", "mid2"]
+
+
+def _tied_rows(rng, chroms, draws, inter_draws=0):
+    """Contacts on a 5 kb grid with counts from {1, 2, 3}: few distinct
+    (dist, cc) pairs, so p-values come in large tied groups."""
+    rows = []
+    for chrom, nb in chroms:
+        for _ in range(draws):
+            i, j = sorted(int(x) for x in rng.integers(0, nb, 2))
+            if i != j:
+                rows.append(
+                    (chrom, i * 5000 + 2500, chrom, j * 5000 + 2500, 1 + (i + j) % 3)
+                )
+    (c1, nb1), (c2, nb2) = chroms[:2]
+    for _ in range(inter_draws):
+        i, j = int(rng.integers(0, nb1)), int(rng.integers(0, nb2))
+        cc = 8 if (i + j) % 7 == 0 else 1  # some inter outliers too
+        rows.append((c1, i * 5000 + 2500, c2, j * 5000 + 2500, cc))
+    return rows
+
+
+def _both_routes(monkeypatch, run):
+    """Run the pipeline with the candidate cap at its default, just under
+    the scored row count (the limit is planned) and at 0 (every
+    refinement pass ranks all rows).  Returns, per cap, the sorted
+    output, the per-pass outlier sets and which route each pass took."""
+    from pfithic_spark import hic
+
+    default_cap = hic.OUTLIER_CANDIDATE_CAP
+    pick = hic._bh_outliers
+
+    def once(cap):
+        monkeypatch.setattr(hic, "OUTLIER_CANDIDATE_CAP", cap)
+        over = []
+
+        def spy(*args):
+            got = pick(*args)
+            over.append(got is None)
+            return got
+
+        monkeypatch.setattr(hic, "_bh_outliers", spy)
+        sets: list = []
+        got = run(sets).toPandas().sort_values(_KEYS, ignore_index=True)
+        sets = [
+            (k, df.sort_values(list(df.columns), ignore_index=True))
+            for k, df in sets
+        ]
+        return got, sets, over
+
+    first = once(default_cap)
+    return [first, once(len(first[0]) - 1), once(0)]
+
+
+def _assert_routes_equal(runs, n_refine):
+    (got, sets, over) = runs[0]
+    assert over == [False] * n_refine  # candidate prefix, under the cap
+    assert runs[2][2] == [True] * n_refine  # cap 0: distributed BH
+    assert [k for k, _ in sets] == list(range(n_refine))
+    assert any(len(df) for _, df in sets)
+    for got_r, sets_r, _ in runs[1:]:
+        pd.testing.assert_frame_equal(got_r, got, check_exact=True)
+        assert len(sets_r) == len(sets)
+        for (k, a), (k_r, b) in zip(sets, sets_r):
+            assert k == k_r
+            pd.testing.assert_frame_equal(b, a, check_exact=True)
+
+
+@pytest.mark.parametrize("plant", ["cutoff_tie", "bound_tie"])
+def test_refinement_routes_equal_intra(spark, monkeypatch, plant):
+    """intraOnly, three refinement passes: the outliers picked from the
+    candidate prefix on the driver equal the full distributed BH's,
+    row for row, and so does the final output.  The outlier threshold is
+    planted so that a tied p-value group sits at BH's cut-off rank k*
+    (cutoff_tie) or exactly at the candidate bound α·n/M (bound_tie)."""
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(23)
+    chroms = [("chr1", 30), ("chr2", 24)]
+    contacts = spark.createDataFrame(
+        _tied_rows(rng, chroms, 400),
+        "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+    )
+
+    def run(passes, alpha, sets=None):
+        cfg = hic.SigConfig(
+            resolution=5000, n_bins=8, passes=passes, outlier_q=alpha
+        )
+        return hic.run_significance(
+            spark, contacts, chroms, cfg=cfg, outliers_out=sets
+        )
+
+    # pass 0's p- and q-values, in BH rank order
+    p0 = run(1, 0.05).toPandas().sort_values(
+        ["p_value"] + _KEYS, ignore_index=True
+    )
+    n = len(p0)
+    m = hic.possible_pairs_np([nb for _, nb in chroms], 5000, 0, 2**62)[2]
+    groups = p0.groupby("p_value", sort=True)["q_value"].agg(["size", "max"])
+    last_rank = groups["size"].cumsum().to_numpy()
+    p = groups.index.to_numpy()
+    q_raw_last = np.minimum(1.0, p * float(m) / last_rank)
+    tied = groups["size"].to_numpy() >= 2
+    if plant == "cutoff_tie":
+        # a tied group whose last rank attains its own q: with α just
+        # above that q, k* is the group's last rank
+        ok = tied & (q_raw_last == groups["max"].to_numpy())
+        ok &= (groups["max"].to_numpy() > 0.01) & (groups["max"].to_numpy() < 0.5)
+        g = np.flatnonzero(ok)[len(np.flatnonzero(ok)) // 2]
+        alpha = float(np.nextafter(groups["max"].iloc[g], 1.0))
+    else:
+        # α chosen so that α·n/M lands on a tied group's p-value
+        ok = tied & (p * m / n > 0.01) & (p * m / n < 0.5)
+        g = np.flatnonzero(ok)[len(np.flatnonzero(ok)) // 2]
+        alpha = float(p[g] * m / n)
+
+    runs = _both_routes(monkeypatch, lambda sets: run(4, alpha, sets))
+    _assert_routes_equal(runs, 3)
+    first = runs[0][1][0][1]
+    if plant == "cutoff_tie":
+        # the whole tied group is in pass 1's outliers, and it is last
+        at_cut = first[first["p_value"] == p[g]]
+        assert len(at_cut) == groups["size"].iloc[g] >= 2
+        assert first["p_value"].max() == p[g]
+    else:
+        assert (p0["p_value"] == p[g]).sum() >= 2
+        assert len(first) and (first["p_value"] < p[g]).all()
+
+
+def test_refinement_routes_equal_all_mode(spark, monkeypatch):
+    """All mode (inter rows share the BH ranking but are never
+    subtracted from the intra fit), with biases: both routes agree."""
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(31)
+    chroms = [("chr1", 60), ("chr2", 50)]
+    contacts = spark.createDataFrame(
+        _tied_rows(rng, chroms, 350, inter_draws=40),
+        "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+    )
+    biases = spark.createDataFrame(
+        [
+            (chrom, k * 5000 + 2500, (1.0, 1.25, 0.8, 3.0)[k % 4])
+            for chrom, nb in chroms
+            for k in range(nb)
+        ],
+        "chr string, mid long, bias double",
+    )
+    cfg = hic.SigConfig(
+        resolution=5000, n_bins=8, passes=4, outlier_q=0.2, contact_type="All"
+    )
+    runs = _both_routes(
+        monkeypatch,
+        lambda sets: hic.run_significance(
+            spark, contacts, chroms, biases=biases, cfg=cfg, outliers_out=sets
+        ),
+    )
+    _assert_routes_equal(runs, 3)
+    assert any((~df["is_intra"]).any() for _, df in runs[0][1])
+
+
+def test_refinement_routes_equal_fragment_mode(spark, monkeypatch):
+    """res=0: the per-distance table stays a DataFrame and the outliers
+    are subtracted from it distributed; both routes agree."""
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(37)
+    frag_rows, rows = [], []
+    for chrom, n in (("chr1", 40), ("chr2", 30)):
+        mids = [int(m) for m in np.cumsum(rng.integers(2000, 6000, n)) + 1000]
+        frag_rows += [(chrom, m) for m in mids]
+        for _ in range(400):
+            i, j = sorted(int(x) for x in rng.integers(0, n, 2))
+            if i != j:
+                rows.append((chrom, mids[i], chrom, mids[j], 1 + (i + j) % 3))
+    contacts = spark.createDataFrame(
+        rows, "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long"
+    )
+    frags = spark.createDataFrame(frag_rows, "chr string, mid long")
+    cfg = hic.SigConfig(
+        resolution=0, n_bins=8, passes=4, outlier_q=0.2, dist_hi=10**6
+    )
+    runs = _both_routes(
+        monkeypatch,
+        lambda sets: hic.run_significance(
+            spark, contacts, fragments=frags, cfg=cfg, outliers_out=sets
+        ),
+    )
+    _assert_routes_equal(runs, 3)

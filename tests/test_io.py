@@ -354,6 +354,7 @@ def test_spline_plot_svg_sink(spark, tmp_path):
     from pfithic_spark import hic
     from pfithic_spark.io import write_spline_plot_svg
     from pfithic_spark.relational import with_distance
+    from pfithic_spark.windows import per_distance_totals
 
     c = with_distance(fx.fixture_contacts(spark, "/root/testdata/sf0.001"))
     cfg = hic.SigConfig(n_bins=fx.NBINS_OCC, passes=1)
@@ -361,7 +362,7 @@ def test_spline_plot_svg_sink(spark, tmp_path):
         [fx.NBINS_GRID] * fx.N_CHROMS, fx.RES, 0, 2**62
     )
     bin_stats, curve, _ = hic.fit_null_curve(
-        spark, c, None, (dists, n_poss), cfg
+        spark, per_distance_totals(c), None, (dists, n_poss), cfg
     )
     out = str(tmp_path / "spline.svg")
     write_spline_plot_svg(bin_stats, curve, out, title="sf0.001 null fit")
