@@ -25,13 +25,16 @@ contacts, and the next one fits the per-distance table of all contacts
 distance.  No global rank and no join of contact rows run before the
 final pass, which alone runs the full BH its output needs.
 
-Scale notes: the driver materializations are the per-distance table
-(≤ genome/resolution rows; res=0 keeps it distributed), the ≤noOfBins
-bin table (SURVEY.md §1.2 sanctioned sync point) and a refinement
-pass's candidate prefix (≤ OUTLIER_CANDIDATE_CAP rows, else that pass
-runs the distributed BH); the curve returns to executors as a
-broadcast variable consumed by an Arrow-batched pandas_udf; every
-global-order step routes through windows.scalable_cumsum.
+Scale notes: the driver materializations are the ≤noOfBins bin table
+(SURVEY.md §1.2 sanctioned sync point), a refinement pass's candidate
+prefix (≤ OUTLIER_CANDIDATE_CAP rows, else that pass runs the
+distributed BH) and, at a fixed resolution, the per-distance table
+(≤ genome/resolution rows).  Fragment mode (res=0) never collects the
+per-distance table: its census is a DataFrame, and fit_null_curve bins
+against it on the cluster.  Intra and inter rows share one scorer, an
+Arrow-batched pandas_udf reading its curve from a broadcast variable
+(inter rows: the flat interChrProb curve); every global-order step
+routes through windows.scalable_cumsum.
 """
 
 from __future__ import annotations
@@ -58,6 +61,9 @@ from .relational import (
 #: bias validity window [SC-2]
 BIAS_LO, BIAS_HI = 0.5, 2.0
 
+#: the values of SigConfig.contact_type
+CONTACT_TYPES = ("intraOnly", "interOnly", "All")
+
 
 @dataclass
 class SigConfig:
@@ -68,7 +74,7 @@ class SigConfig:
     passes: int = 1
     outlier_q: float = 0.05  # pass-2 removal threshold [SC-7]
     grid_points: int = 1000
-    #: intraOnly | interOnly | All — inter contacts scored with the flat
+    #: one of CONTACT_TYPES — inter contacts scored with the flat
     #: interChrProb null and N = observedInterAllSum [SC-5]
     contact_type: str = "intraOnly"
 
@@ -261,10 +267,14 @@ def _binom_sf_udf(n_total: int):
     return sf
 
 
-def _fused_score_udf(spark: SparkSession, gx, gy, n_total: int):
-    """Single-trip scoring UDF: curve interpolation + bias validity
-    window [SC-2] + clamp + binomial survival in ONE Arrow round trip
-    (chaining separate pandas_udfs costs a JVM↔Python hop each)."""
+def _with_p_value(
+    spark: SparkSession, df: DataFrame, gx, gy, n_total: int
+) -> DataFrame:
+    """``df`` with its p_value column: curve interpolation at ``dist`` +
+    bias validity window [SC-2] + clamp + binomial survival in ONE Arrow
+    round trip (chaining separate pandas_udfs costs a JVM↔Python hop
+    each).  Intra rows pass the fitted curve; inter rows the flat
+    interChrProb curve [SC-5]."""
     bc = spark.sparkContext.broadcast((gx, gy))
     n = float(n_total)
 
@@ -288,146 +298,75 @@ def _fused_score_udf(spark: SparkSession, gx, gy, n_total: int):
     # otherwise be pushed below the projection with the UDF inlined into
     # it, and the UDF would run twice (once for the filter, once for the
     # column).  The function itself is deterministic.
-    return score.asNondeterministic()
+    score = score.asNondeterministic()
+    return df.withColumn(
+        "p_value",
+        score(
+            F.col("contact_count"),
+            F.col("dist").cast("double"),
+            F.col("bias1"),
+            F.col("bias2"),
+        ),
+    )
 
 
-def fit_null_curve(
-    spark: SparkSession,
-    byd,
-    n_total: int | None,
-    possible_by_dist,
-    cfg: SigConfig,
-):
-    """Equal-occupancy binning → per-bin contact probability → monotone
-    curve (SC-1 probability: (Σcc_bin / possible_bin) / N).
-
-    ``byd``: the per-distance table (d, cc, np) of the in-range intra
-    contacts (:func:`windows.per_distance_totals`), as a pandas frame
-    or a Spark DataFrame this collects.  Its cardinality is bounded by
-    genome_length/resolution (data-size INDEPENDENT: ~10⁵–10⁶ rows at
-    1 kb on a human genome), so the binning + bin stats run driver-side
-    in numpy on the collected table.  This is the §1.2 sanctioned sync
-    point at its natural bound; the distributed SC-1 form lives in
-    :mod:`pfithic_spark.windows` for unbounded inputs and is
-    oracle-gated by the q_equal_occupancy_binning key.
-
-    ``possible_by_dist``: (dists, n_possible) numpy arrays from
-    :func:`possible_pairs_np`, or a (dist, n_possible) DataFrame.
-    ``n_total``: binomial N (observedIntraInRangeSum); pass None on the
-    first pass to derive it from this same table — Σcc over the
-    per-distance table IS the in-range sum, so no separate agg job.
-    Returns (pandas bin-stats table, (grid_x, grid_y), (Σcc, Σpairs))."""
+def _bin_table_np(byd, possible, n_bins: int) -> pd.DataFrame:
+    """Driver route of :func:`fit_null_curve`: the per-distance table
+    (pandas, or a DataFrame this collects) binned in numpy against the
+    census arrays (dists, n_possible)."""
     if isinstance(byd, DataFrame):
         byd = byd.toPandas()
     byd = byd.sort_values("d", ignore_index=True)
     d = byd["d"].to_numpy(dtype=np.int64)
     cc = byd["cc"].to_numpy(dtype=np.int64)
     npairs = byd["np"].to_numpy(dtype=np.int64)
-    if isinstance(possible_by_dist, DataFrame):
-        pp = possible_by_dist.toPandas()
-        p_dists = pp["dist"].to_numpy(dtype=np.int64)
-        p_counts = pp["n_possible"].to_numpy(dtype=np.int64)
-    else:
-        p_dists, p_counts = possible_by_dist
-        p_dists = np.asarray(p_dists, dtype=np.int64)
-        p_counts = np.asarray(p_counts, dtype=np.int64)
-    # possible pairs at each observed distance; fall back to the observed
-    # pair count where the lag table has no entry (matches the old
-    # left-join + coalesce(np))
+    p_dists, p_counts = (np.asarray(a, dtype=np.int64) for a in possible)
+    # possible pairs at each observed distance; the observed pair count
+    # where the census has no entry (the DataFrame route's coalesce)
     order = np.argsort(p_dists, kind="stable")
-    pos = np.searchsorted(p_dists[order], d)
-    pos_c = np.clip(pos, 0, len(p_dists) - 1) if len(p_dists) else pos
-    hit = (
-        (pos < len(p_dists)) & (p_dists[order][pos_c] == d)
-        if len(p_dists)
-        else np.zeros(len(d), dtype=bool)
-    )
-    n_possible = np.where(hit, p_counts[order][pos_c] if len(p_dists) else 0, npairs)
-    # SC-1 equal-occupancy assignment — same IEEE expressions as
+    p_dists, p_counts = p_dists[order], p_counts[order]
+    pos = np.searchsorted(p_dists, d)
+    hit = pos < len(p_dists)
+    hit[hit] = p_dists[pos[hit]] == d[hit]
+    n_possible = npairs.copy()
+    n_possible[hit] = p_counts[pos[hit]]
+    # SC-1 equal-occupancy assignment — the IEEE expressions of
     # windows.equal_occupancy_assign (exact-int inputs → identical
     # doubles): bin = min(floor((cum-cc)/target), nbins-1)
-    total = int(cc.sum())
-    if n_total is None:
-        n_total = total
-    target = total / cfg.n_bins
+    # (Σcc == 0 puts every row in bin 0, as there)
+    target = int(cc.sum()) / n_bins or 1.0
     cum = np.cumsum(cc)
-    bin_id = np.minimum(
-        np.floor((cum - cc) / target).astype(np.int64), cfg.n_bins - 1
-    )
+    bin_id = np.minimum(np.floor((cum - cc) / target).astype(np.int64), n_bins - 1)
     # exact int64 accumulation (float bincount weights would lose bits
-    # past 2^53 where Spark's long sums stayed exact), then only the
-    # bins that actually occur (groupBy emitted no empty-bin rows)
+    # past 2^53 where Spark's long sums stay exact), then only the bins
+    # that occur, as a groupBy emits them
     nb = int(bin_id.max()) + 1 if len(bin_id) else 0
-    sum_cc = np.zeros(nb, dtype=np.int64)
-    n_pairs = np.zeros(nb, dtype=np.int64)
-    n_poss = np.zeros(nb, dtype=np.int64)
-    sum_dcc = np.zeros(nb, dtype=np.int64)
-    np.add.at(sum_cc, bin_id, cc)
-    np.add.at(n_pairs, bin_id, npairs)
-    np.add.at(n_poss, bin_id, n_possible)
-    np.add.at(sum_dcc, bin_id, d * cc)
-    present = n_pairs > 0
-    pdf = pd.DataFrame(
-        {
-            "bin_id": np.arange(nb, dtype=np.int64)[present],
-            "sum_cc": sum_cc[present],
-            "n_pairs": n_pairs[present],
-            "n_possible": n_poss[present],
-            "avg_dist": sum_dcc[present].astype(np.float64)
-            / sum_cc[present].astype(np.float64),
-        }
-    )
-    if len(pdf) == 0:
-        # empty fit input (e.g. a chromosome filter matched nothing):
-        # degenerate zero curve — scoring over the same empty table
-        # yields no rows, so the pipeline completes with empty output
-        # instead of crashing a 100 TB run on one empty slice
-        pdf["prob"] = pd.Series(dtype=float)
-        return pdf, (np.array([0.0, 1.0]), np.array([0.0, 0.0])), (0, 0)
-    prob = (pdf["sum_cc"] / pdf["n_possible"].clip(lower=1)) / float(n_total)
-    gx, gy = st.fit_monotone_curve(
-        pdf["avg_dist"].to_numpy(),
-        prob.to_numpy(),
-        w=pdf["n_pairs"].to_numpy(dtype=np.float64),
-        grid_points=cfg.grid_points,
-    )
-    pdf["prob"] = prob
-    return pdf, (gx, gy), (total, int(npairs.sum()))
+    bins = {"bin_id": np.arange(nb, dtype=np.int64)}
+    for name, v in (
+        ("sum_cc", cc),
+        ("n_pairs", npairs),
+        ("n_possible", n_possible),
+        ("sum_dcc", d * cc),
+    ):
+        bins[name] = np.zeros(nb, dtype=np.int64)
+        np.add.at(bins[name], bin_id, v)
+    pdf = pd.DataFrame(bins)
+    return pdf[pdf["n_pairs"] > 0].reset_index(drop=True)
 
 
-def fit_null_curve_distributed(
-    spark: SparkSession,
-    byd: DataFrame,
-    n_total: int | None,
-    possible_df: DataFrame | None,
-    cfg: SigConfig,
-):
-    """Distributed-binning variant of :func:`fit_null_curve` for
-    UNBOUNDED per-distance cardinality (res=0 irregular midpoints,
-    where distinct pair distances grow with the data instead of being
-    capped by genome/resolution).
-
-    Identical arithmetic — same IEEE expressions for the equal-occupancy
-    assignment, exact integer bin sums — but the binning runs through
+def _bin_table_df(byd: DataFrame, possible: DataFrame, n_bins: int) -> pd.DataFrame:
+    """Distributed route of :func:`fit_null_curve`: the census is a
+    (dist, n_possible) DataFrame (res=0, where the distinct distances
+    grow with the data), joined on the cluster and binned by
     windows.equal_occupancy_assign (two-phase cumsum, no single-task
-    window) and the ONLY driver materializations are the ≤ n_bins bin
-    table and two scalar aggregates.  ``byd``: the per-distance table
-    (d, cc, np) as a DataFrame.  ``possible_df``: (dist, n_possible)
-    DataFrame (e.g. possible_pairs_from_fragments), joined distributed;
-    distances absent from it fall back to the observed pair count,
-    matching the driver-side form.
-    """
-    if possible_df is not None:
-        p = possible_df.select(F.col("dist").alias("d"), "n_possible")
-        byd = byd.join(p, "d", "left").withColumn(
-            "n_possible", F.coalesce(F.col("n_possible"), F.col("np"))
-        )
-    else:
-        byd = byd.withColumn("n_possible", F.col("np"))
-    byd = byd.cache()  # read by the total agg, the cumsum, and the stats
-    assigned = win.equal_occupancy_assign(
-        byd, cfg.n_bins, small_threshold=None
+    window); only the ≤ n_bins bin table reaches the driver."""
+    p = possible.select(F.col("dist").alias("d"), "n_possible")
+    byd = (
+        byd.join(p, "d", "left")
+        .withColumn("n_possible", F.coalesce(F.col("n_possible"), F.col("np")))
+        .cache()  # read by the total agg, the cumsum and the stats
     )
+    assigned = win.equal_occupancy_assign(byd, n_bins, small_threshold=None)
     stats = assigned.groupBy("bin_id").agg(
         F.sum("cc").alias("sum_cc"),
         F.sum("np").alias("n_pairs"),
@@ -436,18 +375,53 @@ def fit_null_curve_distributed(
     )
     pdf = stats.toPandas().sort_values("bin_id", ignore_index=True)
     byd.unpersist()
-    total = int(pdf["sum_cc"].sum())
+    return pdf.astype(np.int64)
+
+
+def fit_null_curve(
+    spark: SparkSession,
+    byd,
+    n_total: int | None,
+    possible,
+    cfg: SigConfig,
+):
+    """Equal-occupancy binning → per-bin contact probability → monotone
+    curve (SC-1 probability: (Σcc_bin / possible_bin) / N).
+
+    ``byd``: the per-distance table (d, cc, np) of the in-range intra
+    contacts (:func:`windows.per_distance_totals`), pandas or a Spark
+    DataFrame.  ``possible``: the census, whose form picks the route:
+
+    - (dists, n_possible) numpy arrays (:func:`possible_pairs_np`, the
+      grid census): the table is collected and binned in numpy.  Its
+      cardinality is bounded by genome_length/resolution (~10⁵–10⁶ rows
+      at 1 kb on a human genome), the §1.2 sanctioned sync point.
+    - a (dist, n_possible) DataFrame (res=0): binned distributed, and
+      ``byd`` must be a DataFrame.
+
+    Both routes build the same exact-int64 bin table; the probabilities
+    and the fit below run once.  Distances absent from the census fall
+    back to the observed pair count.  ``n_total``: binomial N
+    (observedIntraInRangeSum); pass None on the first pass to derive it
+    from this same table — Σcc over the per-distance table IS the
+    in-range sum, so no separate agg job.
+    Returns (pandas bin-stats table, (grid_x, grid_y), (Σcc, Σpairs))."""
+    if isinstance(possible, DataFrame):
+        pdf = _bin_table_df(byd, possible, cfg.n_bins)
+    else:
+        pdf = _bin_table_np(byd, possible, cfg.n_bins)
+    sum_dcc = pdf.pop("sum_dcc")
+    pdf["avg_dist"] = sum_dcc.astype(np.float64) / pdf["sum_cc"].astype(np.float64)
     if len(pdf) == 0:
-        # same empty-slice guard as fit_null_curve
-        pdf["avg_dist"] = pd.Series(dtype=float)
+        # empty fit input (e.g. a chromosome filter matched nothing):
+        # degenerate zero curve — scoring over the same empty table
+        # yields no rows, so the pipeline completes with empty output
+        # instead of crashing a 100 TB run on one empty slice
         pdf["prob"] = pd.Series(dtype=float)
-        pdf = pdf.drop(columns=["sum_dcc"])
         return pdf, (np.array([0.0, 1.0]), np.array([0.0, 0.0])), (0, 0)
+    total = int(pdf["sum_cc"].sum())
     if n_total is None:
         n_total = total
-    pdf["avg_dist"] = pdf["sum_dcc"].astype(np.float64) / pdf["sum_cc"].astype(
-        np.float64
-    )
     prob = (pdf["sum_cc"] / pdf["n_possible"].clip(lower=1)) / float(n_total)
     gx, gy = st.fit_monotone_curve(
         pdf["avg_dist"].to_numpy(),
@@ -456,7 +430,6 @@ def fit_null_curve_distributed(
         grid_points=cfg.grid_points,
     )
     pdf["prob"] = prob
-    pdf = pdf.drop(columns=["sum_dcc"])
     return pdf, (gx, gy), (total, int(pdf["n_pairs"].sum()))
 
 
@@ -622,6 +595,11 @@ def run_significance(
     once it has materialized the result.  Without it they stay cached.
     Refinement passes leave nothing cached."""
     cfg = cfg or SigConfig()
+    if cfg.contact_type not in CONTACT_TYPES:
+        raise ValueError(
+            f"contact_type must be one of {', '.join(CONTACT_TYPES)}; "
+            f"got {cfg.contact_type!r}"
+        )
     if fragments is None and chr_nbins is None:
         raise ValueError("provide fragments or chr_nbins for the census")
     base = canonicalize_pairs(contacts)
@@ -648,29 +626,24 @@ def run_significance(
     # possible-pair census from the actual fragment set:
     # - fixed resolution: per-chromosome occupancy autocorrelation —
     #   collect bounded by genome/resolution, no pair join at all;
-    # - res=0 (irregular midpoints): distributed banded self-join; the
-    #   collected per-distance table is bounded by the DISTINCT IN-RANGE
-    #   pair distances, so callers should bound [dist_lo, dist_hi]
-    #   (the reference's distUpThres does the same) — an unbounded
-    #   range over arbitrary midpoints is inherently O(pairs).
-    possible_df = None
+    # - res=0 (irregular midpoints): distributed banded self-join.  Its
+    #   cardinality is the distinct in-range pair distances (unbounded),
+    #   so the census, the per-distance table and the binning all stay
+    #   on the cluster and BH's M is one scalar agg; the join is bounded
+    #   by [dist_lo, dist_hi], as the reference's distUpThres bounds it.
     if fragments is not None:
         if cfg.resolution > 0:
             p_dists, p_counts, m_possible = possible_pairs_grid_census(
                 fragments, cfg.resolution, cfg.dist_lo, cfg.dist_hi
             )
+            possible = (p_dists, p_counts)
         else:
-            # res=0: the census stays a DataFrame (its cardinality is
-            # the distinct in-range pair distances — unbounded, so it
-            # never comes to the driver); the fit joins it distributed
-            # and BH's M is one scalar agg
-            possible_df = possible_pairs_from_fragments(
+            possible = possible_pairs_from_fragments(
                 fragments, cfg.dist_lo, cfg.dist_hi
             ).cache()
-            kept.append(possible_df)
-            p_dists = p_counts = None
+            kept.append(possible)
             m_possible = int(
-                possible_df.agg(F.sum("n_possible")).collect()[0][0] or 0
+                possible.agg(F.sum("n_possible")).collect()[0][0] or 0
             )
         nb = None
         if score_inter:
@@ -701,13 +674,14 @@ def run_significance(
         p_dists, p_counts, m_possible = possible_pairs_np(
             nb, cfg.resolution, cfg.dist_lo, cfg.dist_hi
         )
-    possible = (p_dists, p_counts)
+        possible = (p_dists, p_counts)
+    distributed = isinstance(possible, DataFrame)
     # global scalars (N = observedIntraInRangeSum, row count) come out of
     # pass 0's per-distance table below — no separate agg job
     n_rows = n_total = None
 
     inter_scored = None
-    m_total = 0
+    m_inter = 0
     n_inter_rows = 0
     if score_inter:
         # flat inter-chromosomal null [SC-5]: interChrProb =
@@ -722,14 +696,13 @@ def run_significance(
         ).collect()[0]
         n_inter = n_inter or 0
         inter_prob = n_inter / possible_inter if possible_inter else 0.0
-        prior = contact_prior(
-            None, F.lit(float(inter_prob)), F.col("bias1"), F.col("bias2")
+        # the flat curve: np.interp returns inter_prob exactly at any
+        # finite distance
+        flat = np.array([inter_prob, inter_prob])
+        inter_scored = _with_p_value(
+            spark, inter, np.array([0.0, 1.0]), flat, int(n_inter)
         )
-        inter_scored = inter.withColumn("p_prior", prior).withColumn(
-            "p_value",
-            _binom_sf_udf(int(n_inter))(F.col("contact_count"), F.col("p_prior")),
-        )
-        m_total += possible_inter
+        m_inter = possible_inter
 
     # the per-distance table (d, cc, np) of c, aggregated once
     # (collected for driver binning, a DataFrame for res=0).  Every pass
@@ -738,7 +711,7 @@ def run_significance(
     byd0 = byd = None
     if score_intra:
         byd0 = win.per_distance_totals(c)
-        if possible_df is None:
+        if not distributed:
             byd0 = byd0.toPandas().sort_values("d", ignore_index=True)
         byd = byd0
     scored = None
@@ -748,39 +721,18 @@ def run_significance(
         if not score_intra and not final:
             continue  # no intra fit to refine: every pass scores alike
         if score_intra:
-            if possible_df is not None:
-                # res=0: distributed binning — only the ≤ n_bins bin
-                # table reaches the driver
-                bin_pdf, (gx, gy), (fit_cc, fit_np) = (
-                    fit_null_curve_distributed(
-                        spark, byd, n_total, possible_df, cfg
-                    )
-                )
-            else:
-                bin_pdf, (gx, gy), (fit_cc, fit_np) = fit_null_curve(
-                    spark, byd, n_total, possible, cfg
-                )
+            bin_pdf, (gx, gy), (fit_cc, fit_np) = fit_null_curve(
+                spark, byd, n_total, possible, cfg
+            )
             if bin_stats_out is not None:
                 bin_stats_out.append((pass_no, bin_pdf))
             if n_total is None:  # pass 0: byd0 covers all of c, so Σcc == N
                 n_total, n_rows = fit_cc, fit_np
                 m_possible = m_possible or n_rows
-            score = _fused_score_udf(spark, gx, gy, int(n_total))
-            scored = c.withColumn("p_prior", F.lit(None).cast("double"))
-            scored = scored.withColumn(
-                "p_value",
-                score(
-                    F.col("contact_count"),
-                    F.col("dist").cast("double"),
-                    F.col("bias1"),
-                    F.col("bias2"),
-                ),
-            )
-        parts = [s for s in (scored if score_intra else None, inter_scored) if s is not None]
-        combined = parts[0]
-        for p in parts[1:]:
-            combined = combined.unionByName(p)
-        m_bh = (int(m_possible) if score_intra else 0) + m_total
+            scored = _with_p_value(spark, c, gx, gy, int(n_total))
+        parts = [df for df in (scored, inter_scored) if df is not None]
+        combined = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        m_bh = (int(m_possible) if score_intra else 0) + m_inter
         # exact combined count known only when no inter rows were
         # unioned in → enables the single-sort BH form
         n_exact = n_rows if (score_intra and inter_scored is None) else None
@@ -811,7 +763,7 @@ def run_significance(
             if outliers_out is not None:
                 outliers = out_df.toPandas()
             out_byd = win.per_distance_totals(out_df.filter("is_intra"))
-            if possible_df is None:
+            if not distributed:
                 # one row per outlier distance: ≤ the fit table's size
                 out_byd = out_byd.toPandas()
         if outliers_out is not None:

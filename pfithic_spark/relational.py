@@ -102,9 +102,9 @@ def remove_bad_fragments(contacts: DataFrame, bad_frags: DataFrame) -> DataFrame
 def attach_biases(
     contacts: DataFrame, biases: DataFrame, default: float = 1.0
 ) -> DataFrame:
-    """contacts ⋈ biases ×2 endpoints, left outer; missing bias → default
-    [P `fithic.py::read_biases` consumers].  Broadcast joins (bias table
-    is per-locus).
+    """contacts ⋈ biases ×2 endpoints, left outer; missing bias (no row,
+    null or NaN) → default [P `fithic.py::read_biases` consumers].
+    Broadcast joins (bias table is per-locus).
 
     The bias table is keyed (chr, mid) — loci on different chromosomes
     share midpoint coordinates, so each endpoint joins on BOTH columns
@@ -124,11 +124,12 @@ def attach_biases(
             F.col("bias").alias("_b2"),
         )
     )
+    d = F.lit(float(default))
     return (
         contacts.join(b1, ["chr1", "mid1"], "left")
         .join(b2, ["chr2", "mid2"], "left")
-        .withColumn("bias1", F.coalesce(F.col("_b1"), F.lit(default)))
-        .withColumn("bias2", F.coalesce(F.col("_b2"), F.lit(default)))
+        .withColumn("bias1", F.coalesce(F.nanvl("_b1", d), d))
+        .withColumn("bias2", F.coalesce(F.nanvl("_b2", d), d))
         .drop("_b1", "_b2")
     )
 

@@ -385,7 +385,7 @@ def test_run_significance_empty_input(spark):
         )
         assert out.collect() == []
         assert {"p_value", "q_value"} <= set(out.columns)
-    # res=0 fragment-census path through fit_null_curve_distributed
+    # res=0 fragment census: fit_null_curve bins on the cluster
     frags = spark.createDataFrame([], "chr string, mid long")
     out = hic.run_significance(
         spark,
@@ -451,6 +451,169 @@ def test_all_mode_matches_pandas_ref(spark, sf_dir):
     np.testing.assert_allclose(got["bias2"], want["bias2"], rtol=1e-12)
     np.testing.assert_allclose(got["p_value"], want["p_value"], rtol=1e-9, atol=1e-300)
     np.testing.assert_allclose(got["q_value"], want["q_value"], rtol=1e-9, atol=1e-300)
+
+
+def test_nan_bias_is_missing_all_mode(spark):
+    """A NaN bias is a missing bias (neutral 1.0), as in pandas_ref's
+    fillna: intra and inter rows touching the NaN locus score like
+    unbiased rows, and bias1/bias2 read 1.0 there."""
+    from pandas_ref import run_significance_all_pandas
+
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(41)
+    nb = 12
+    intra = sorted(
+        {
+            (chrom, int(i) * 5000 + 2500, chrom, int(j) * 5000 + 2500)
+            for chrom in ("chr1", "chr2")
+            for i, j in (sorted(rng.integers(0, nb, 2)) for _ in range(60))
+            if i != j
+        }
+    )
+    intra = [r + (1 + (r[1] + r[3]) // 5000 % 3,) for r in intra]
+    inter = [("chr1", 2500, "chr2", 7500, 2), ("chr1", 12500, "chr2", 2500, 1)]
+    bias_rows = [
+        (chrom, k * 5000 + 2500, (1.25, 0.8, 1.1)[k % 3])
+        for chrom in ("chr1", "chr2")
+        for k in range(nb)
+    ]
+    bias_rows[0] = ("chr1", 2500, float("nan"))
+    cols = ["chr1", "mid1", "chr2", "mid2", "contact_count"]
+    want = (
+        run_significance_all_pandas(
+            pd.DataFrame(intra, columns=cols),
+            pd.DataFrame(inter, columns=cols),
+            pd.DataFrame(bias_rows, columns=["chr", "mid", "bias"]),
+            nbins_grid=nb,
+            n_bins=5,
+        )
+        .sort_values(_KEYS, ignore_index=True)
+    )
+    got = (
+        hic.run_significance(
+            spark,
+            spark.createDataFrame(
+                intra + inter,
+                "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+            ),
+            [("chr1", nb), ("chr2", nb)],
+            biases=spark.createDataFrame(
+                bias_rows, "chr string, mid long, bias double"
+            ),
+            cfg=hic.SigConfig(n_bins=5, contact_type="All"),
+        )
+        .toPandas()
+        .sort_values(_KEYS, ignore_index=True)
+    )
+    assert len(got) == len(want)
+    pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
+    at_nan = (got["chr1"] == "chr1") & (got["mid1"] == 2500)
+    assert at_nan.sum() >= 2 and (got["chr1"][at_nan] != got["chr2"][at_nan]).any()
+    assert (got["bias1"][at_nan] == 1.0).all()
+    for c in ("bias1", "bias2", "p_value", "q_value"):
+        assert not got[c].isna().any(), c
+        np.testing.assert_allclose(got[c], want[c], rtol=1e-9, atol=1e-300)
+
+
+def test_unknown_contact_type_is_rejected(spark):
+    from pfithic_spark import hic
+
+    contacts = spark.createDataFrame(
+        [("chr1", 2500, "chr1", 7500, 1)],
+        "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+    )
+    cfg = hic.SigConfig(contact_type="intra")
+    with pytest.raises(ValueError, match="intraOnly, interOnly, All.*'intra'"):
+        hic.run_significance(spark, contacts, [("chr1", 4)], cfg=cfg)
+
+
+@pytest.mark.parametrize("n_total", [None, 10**18])
+@pytest.mark.parametrize("rows", ["table", "empty"])
+def test_fit_null_curve_routes_equal(spark, n_total, rows):
+    """fit_null_curve over one per-distance table, with the census as
+    driver arrays (numpy binning) and as a DataFrame (distributed
+    binning): the bin-stats frame, the curve and the totals are equal
+    bit for bit.  Two of the table's distances are missing from the
+    census, so both routes fall back to the observed pair count."""
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(43)
+    if rows == "table":
+        # Σcc past 2^53 while Σ d·cc still fits in int64
+        byd = [
+            (d, int(rng.integers(1, 20)) << 46, int(rng.integers(1, 9)))
+            for d in range(1, 41)
+        ]
+        census = [(d, 300 - d) for d in range(1, 39)]
+        census.append((10**7, 1))  # a census distance with no contacts
+    else:
+        byd, census = [], []
+    byd_df = spark.createDataFrame(byd, "d long, cc long, np long")
+    census_df = spark.createDataFrame(census, "dist long, n_possible long")
+    arrays = (
+        np.array([d for d, _ in census], dtype=np.int64),
+        np.array([n for _, n in census], dtype=np.int64),
+    )
+    cfg = hic.SigConfig(n_bins=7, grid_points=50)
+    a_pdf, (a_gx, a_gy), a_tot = hic.fit_null_curve(
+        spark, byd_df, n_total, arrays, cfg
+    )
+    b_pdf, (b_gx, b_gy), b_tot = hic.fit_null_curve(
+        spark, byd_df, n_total, census_df, cfg
+    )
+    pd.testing.assert_frame_equal(a_pdf, b_pdf, check_exact=True)
+    assert np.array_equal(a_gx, b_gx) and np.array_equal(a_gy, b_gy)
+    assert a_tot == b_tot
+    if rows == "table":
+        assert a_tot == (sum(r[1] for r in byd), sum(r[2] for r in byd))
+        assert a_tot[0] > 2**53
+        assert a_pdf["sum_cc"].sum() == a_tot[0]  # exact int64 bin sums
+        # distances 39 and 40 fall back to their observed pair count
+        fallback = sum(r[2] for r in byd[-2:])
+        assert a_pdf["n_possible"].sum() == sum(300 - d for d in range(1, 39)) + fallback
+        assert len(a_pdf) > 1
+    else:
+        assert len(a_pdf) == 0 and a_tot == (0, 0)
+
+
+def test_candidate_plan_scores_once_per_side(spark, monkeypatch):
+    """All mode: the refinement candidate collect evaluates the scoring
+    UDF once for the intra side and once for the inter side — the
+    p_value filter is not pushed below the UDF with a second copy
+    inlined into it."""
+    from pfithic_spark import hic
+
+    rng = np.random.default_rng(31)
+    chroms = [("chr1", 60), ("chr2", 50)]
+    contacts = spark.createDataFrame(
+        _tied_rows(rng, chroms, 350, inter_draws=40),
+        "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+    )
+    plans = []
+    pick = hic._bh_outliers
+
+    def spy(combined, *args):
+        cls = type(combined)
+        to_pandas = cls.toPandas
+
+        def record(self):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return to_pandas(self)
+
+        monkeypatch.setattr(cls, "toPandas", record)
+        try:
+            return pick(combined, *args)
+        finally:
+            monkeypatch.setattr(cls, "toPandas", to_pandas)
+
+    monkeypatch.setattr(hic, "_bh_outliers", spy)
+    cfg = hic.SigConfig(
+        resolution=5000, n_bins=8, passes=2, outlier_q=0.2, contact_type="All"
+    )
+    hic.run_significance(spark, contacts, chroms, cfg=cfg).count()
+    assert len(plans) == 1
+    assert plans[0].count("ArrowEvalPython") == 2, plans[0]
 
 
 _KEYS = ["chr1", "mid1", "chr2", "mid2"]

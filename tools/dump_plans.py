@@ -1,11 +1,21 @@
 """Regenerate PLANS.md: formatted physical plans for representative
-query keys with scale commentary.
+query keys with scale commentary; or dump chosen keys' plans to files.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage:
+  python tools/dump_plans.py [sf_dir]
+      rewrite PLANS.md from the PICKS below
+  python tools/dump_plans.py [sf_dir] --keys K [K ...] --out DIR --suffix S
+      write each key's full `.explain("formatted")` plan to
+      DIR/<key>_<S>.txt (e.g. S = "before" / "after" around a change)
+
+sf_dir defaults to testdata/sf0.01 beside the repository: plan shape does
+not depend on the scale, and a small one keeps the eager construction
+probes cheap.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -252,20 +262,22 @@ PICKS = {
 }
 
 
-def main() -> None:
-    from pfithic_spark.session import get_spark
+def plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
-    import __spark_entry__ as entry
 
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app="dump-plans", cpus="8")
-    queries = entry.queries()
+def dump_keys(spark, queries, sf: str, keys: list[str], out: str, suffix: str) -> None:
+    os.makedirs(out, exist_ok=True)
+    for key in keys:
+        txt = plan(queries[key](spark, sf))
+        with open(os.path.join(out, f"{key}_{suffix}.txt"), "w") as fh:
+            fh.write(txt)
+        print(f"wrote {key}_{suffix}.txt ({len(txt.splitlines())} lines)")
 
-    def plan(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
 
+def write_plans_md(spark, queries, sf: str) -> None:
     out = [
         "# PLANS — representative physical plans (sf0.01, local[8], AQE on)",
         "",
@@ -296,6 +308,33 @@ def main() -> None:
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(PICKS)} plans)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "sf_dir",
+        nargs="?",
+        default=os.path.join(os.path.dirname(REPO), "testdata", "sf0.01"),
+    )
+    ap.add_argument("--keys", nargs="+", metavar="K")
+    ap.add_argument("--out", help="directory for --keys plan files")
+    ap.add_argument("--suffix", help="file name suffix for --keys plan files")
+    args = ap.parse_args()
+    if args.keys and not (args.out and args.suffix):
+        ap.error("--keys needs --out and --suffix")
+
+    from pfithic_spark.session import get_spark
+
+    import __spark_entry__ as entry
+
+    spark = get_spark(app="dump-plans", cpus="8")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = entry.queries()
+    if args.keys:
+        dump_keys(spark, queries, args.sf_dir, args.keys, args.out, args.suffix)
+    else:
+        write_plans_md(spark, queries, args.sf_dir)
     spark.stop()
 
 
