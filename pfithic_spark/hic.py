@@ -412,14 +412,16 @@ def fit_null_curve(
         pdf = _bin_table_np(byd, possible, cfg.n_bins)
     sum_dcc = pdf.pop("sum_dcc")
     pdf["avg_dist"] = sum_dcc.astype(np.float64) / pdf["sum_cc"].astype(np.float64)
-    if len(pdf) == 0:
-        # empty fit input (e.g. a chromosome filter matched nothing):
-        # degenerate zero curve — scoring over the same empty table
-        # yields no rows, so the pipeline completes with empty output
-        # instead of crashing a 100 TB run on one empty slice
-        pdf["prob"] = pd.Series(dtype=float)
-        return pdf, (np.array([0.0, 1.0]), np.array([0.0, 0.0])), (0, 0)
     total = int(pdf["sum_cc"].sum())
+    if total == 0:
+        # nothing to fit: an empty table (e.g. a chromosome filter
+        # matched nothing) or only zero counts, whose avg_dist and prob
+        # are 0/0.  The degenerate zero curve scores every contact
+        # p = 1.0, instead of crashing a 100 TB run on one empty slice
+        # or scoring it NaN; Σpairs stays the row count.
+        pdf["prob"] = 0.0
+        zero = (np.array([0.0, 1.0]), np.array([0.0, 0.0]))
+        return pdf, zero, (0, int(pdf["n_pairs"].sum()))
     if n_total is None:
         n_total = total
     prob = (pdf["sum_cc"] / pdf["n_possible"].clip(lower=1)) / float(n_total)
@@ -541,13 +543,15 @@ def _per_distance_np(outliers: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _bh(combined: DataFrame, m: int, n_rows, n_exact) -> DataFrame:
+def _bh(combined: DataFrame, m: int, n_rows) -> DataFrame:
     """BH-FDR q-values over every scored row (the final pass, and a
-    refinement pass over the candidate cap)."""
+    refinement pass over the candidate cap).  Over 200 k intra rows
+    (``n_rows``) the two-phase :func:`windows.bh_fdr_scalable`, else
+    :func:`windows.bh_fdr`, which sorts once in every contact_type."""
     tiebreak = ["chr1", "chr2", "mid1", "mid2"]
     if (n_rows or 0) > 200_000:
         return win.bh_fdr_scalable(combined, "p_value", m=m, tiebreak=tiebreak)
-    return win.bh_fdr(combined, "p_value", m=m, tiebreak=tiebreak, n_rows=n_exact)
+    return win.bh_fdr(combined, "p_value", m=m, tiebreak=tiebreak)
 
 
 def run_significance(
@@ -733,15 +737,12 @@ def run_significance(
         parts = [df for df in (scored, inter_scored) if df is not None]
         combined = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         m_bh = (int(m_possible) if score_intra else 0) + m_inter
-        # exact combined count known only when no inter rows were
-        # unioned in → enables the single-sort BH form
-        n_exact = n_rows if (score_intra and inter_scored is None) else None
         if final:
             # materialize the scored table before BH: the distributed
             # BH's range repartition SAMPLES its input, which would re-run
             # the whole scoring UDF lineage once per downstream job
             combined = combined.cache()
-            scored = _bh(combined, m_bh, n_rows, n_exact)
+            scored = _bh(combined, m_bh, n_rows)
             break
         # refine: remove this pass's outliers (q < outlier_q) from the
         # next fit [SC-7]
@@ -756,7 +757,7 @@ def run_significance(
             # over the candidate cap: rank every row, and keep the
             # outliers on the cluster
             combined = combined.cache()
-            ranked = _bh(combined, m_bh, n_rows, n_exact).filter(
+            ranked = _bh(combined, m_bh, n_rows).filter(
                 F.col("q_value") < cfg.outlier_q
             )
             out_df = ranked.select(*_outlier_cols())

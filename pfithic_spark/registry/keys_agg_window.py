@@ -309,7 +309,7 @@ def q_window_running(spark, sf_dir):
     global window."""
     c = rel.with_distance(fx.fixture_contacts(spark, sf_dir))
     byd = win.per_distance_totals(c)
-    return win.scalable_cumsum(byd, "d", "cc", "running_cc").select(
+    return win.scalable_cumsum(byd, "d", {"running_cc": "cc"}).select(
         "d", "cc", "running_cc"
     )
 

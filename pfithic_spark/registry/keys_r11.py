@@ -646,48 +646,21 @@ def compaction_plan(
     )
     target = max(total // 4, 1)
     cands0 = a.filter(F.col("action") == "compact")
-    if n_files <= small_threshold:
-        # metadata-grain census: one window task is the cheapest plan
-        wc = Window.orderBy(
-            F.col("n_rows").desc(), "bucket"
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        packed = cands0.withColumn(
-            "cum_before", F.sum("n_rows").over(wc) - F.col("n_rows")
-        )
-    else:
-        # scalable spine (VERDICT r11 #5): value-bucket by n_rows
-        # DESCENDING (equal values never split across buckets, so the
-        # per-bucket (n_rows DESC, bucket) window is globally
-        # consistent), local running sums, broadcast prefix offsets —
-        # the scalable_cumsum two-phase shape with a descending
-        # leading order
-        parted = win._bucketed_by_value(
-            cands0, "n_rows", None, descending=True
-        )
-        w_local = (
-            Window.partitionBy("_pid")
-            .orderBy(F.col("n_rows").desc(), "bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        local = parted.withColumn("_lc", F.sum("n_rows").over(w_local))
-        totals = parted.groupBy("_pid").agg(
-            F.sum("n_rows").alias("_pt")
-        )
-        w_pre = Window.orderBy("_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offs = totals.select(
-            "_pid",
-            F.coalesce(F.sum("_pt").over(w_pre), F.lit(0)).alias("_off"),
-        )
-        packed = (
-            local.join(F.broadcast(offs), "_pid")
-            .withColumn(
-                "cum_before",
-                F.col("_off") + F.col("_lc") - F.col("n_rows"),
-            )
-            .drop("_pid", "_lc", "_off")
-        )
+    # next-fit spine: running Σn_rows in (n_rows DESC, bucket) order.
+    # n_files bounds the candidate count, so it routes the spine: one
+    # window task for a metadata-grain census, the two-phase
+    # value-bucketed form above small_threshold (equal n_rows never
+    # split across buckets, so the per-bucket order is globally
+    # consistent)
+    packed = win.scalable_cumsum(
+        cands0,
+        "n_rows",
+        {"cum": "n_rows"},
+        descending=True,
+        tiebreak=["bucket"],
+        small_threshold=small_threshold,
+        precomputed_count=n_files,
+    )
     cands = (
         packed
         .select(
@@ -695,7 +668,7 @@ def compaction_plan(
             "n_rows",
             "action",
             F.floor(
-                F.col("cum_before").cast("double")
+                (F.col("cum") - F.col("n_rows")).cast("double")
                 / F.lit(float(target))
             )
             .cast("long")

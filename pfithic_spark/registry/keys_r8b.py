@@ -620,7 +620,7 @@ def q_roc_auc(spark, sf_dir):
         (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
     )
     r = win.scalable_cumsum(
-        g, "cents", "neg", "cum_inc", small_threshold=win.SMALL_THRESHOLD_DEFAULT
+        g, "cents", {"cum_inc": "neg"}, small_threshold=win.SMALL_THRESHOLD_DEFAULT
     ).select(
         "pos",
         "neg",
@@ -1673,7 +1673,7 @@ def q_cliffs_delta(spark, sf_dir):
         F.sum((F.col("grp") == 1).cast("long")).alias("c1"),
     )
     r = win.scalable_cumsum(
-        g, "v", "c1", "cum1_inc", small_threshold=win.SMALL_THRESHOLD_DEFAULT
+        g, "v", {"cum1_inc": "c1"}, small_threshold=win.SMALL_THRESHOLD_DEFAULT
     ).select(
         "c0",
         "c1",
@@ -2650,10 +2650,10 @@ def q_weighted_quantile(spark, sf_dir):
 
     100 TB shape: ONE groupBy to the value grain (integer cents,
     §8.15 tie-free), then the prefix sum AND the global total ride
-    one windows.scalable_cumsum_multi pass (ADVICE r8: distinct
-    price cents grow ~linearly with volume, so the value grain is
-    NOT domain-bounded; small_threshold keeps the plain window below
-    2 M distinct values), and one conditional-min census.
+    one windows.scalable_cumsum pass (distinct price cents grow
+    ~linearly with volume, so the value grain is NOT domain-bounded;
+    small_threshold keeps the plain window below 2 M distinct values),
+    and one conditional-min census.
     Determinism: INTEGERS END TO END — weights are exact unit counts,
     thresholds cut by integer cross-multiply (4·cumw ≥ q·W, §8.19 —
     never a double quotient), outputs are integer cents; there is no
@@ -2668,7 +2668,7 @@ def q_weighted_quantile(spark, sf_dir):
         .cast("long")
         .alias("w")
     )
-    c = win.scalable_cumsum_multi(
+    c = win.scalable_cumsum(
         g,
         "cents",
         sums={"cumw": "w"},

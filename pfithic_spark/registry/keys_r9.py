@@ -677,7 +677,7 @@ def q_conformal_interval(spark, sf_dir):
     )
     vg = cal.groupBy("r6", "n_cal").agg(F.count(F.lit(1)).alias("cnt"))
     cum = win.scalable_cumsum(
-        vg, "r6", "cnt", "cum", small_threshold=win.SMALL_THRESHOLD_DEFAULT
+        vg, "r6", {"cum": "cnt"}, small_threshold=win.SMALL_THRESHOLD_DEFAULT
     )
     qh = (
         cum.filter(
@@ -803,13 +803,12 @@ def q_energy_distance(spark, sf_dir):
 
     100 TB shape: one orders scan to (cents, group) value grain; all
     four prefix sums and all four global totals ride ONE
-    windows.scalable_cumsum_multi pass (ADVICE r8, applied to
-    q_roc_auc and binding here too: distinct price cents grow
-    ~linearly with volume, so the value grain is NOT domain-bounded;
-    small_threshold keeps the plain one-task window — and the
-    single-scan join-free plan gate — below 2 M distinct values, the
-    shared-bucketing two-phase form above); the census is a scalar
-    reduce."""
+    windows.scalable_cumsum pass (as in q_roc_auc: distinct price
+    cents grow ~linearly with volume, so the value grain is NOT
+    domain-bounded; small_threshold keeps the plain one-task window —
+    and the single-scan join-free plan gate — below 2 M distinct
+    values, the shared-bucketing two-phase form above); the census is
+    a scalar reduce."""
     o = load_table(spark, sf_dir, "orders")
     t = o.select(
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
@@ -828,7 +827,7 @@ def q_energy_distance(spark, sf_dir):
         (F.col("nxv") * F.col("cents")).alias("nxvv"),
         (F.col("nyv") * F.col("cents")).alias("nyvv"),
     )
-    cum = win.scalable_cumsum_multi(
+    cum = win.scalable_cumsum(
         spv,
         "cents",
         sums={"cfx": "nxv", "cgx": "nxvv", "cfy": "nyv", "cgy": "nyvv"},
@@ -1869,12 +1868,12 @@ def q_auc_by_group(spark, sf_dir):
     value grain, exact int64 2U, ONE division, NULL on single-class
     slices §8.17).  100 TB shape: ONE fact join to attach the slice
     key, groupBy to (segment, cents) grain, then the per-slice prefix
-    sum routes through windows.scalable_part_cumsum (VERDICT r9 #4:
-    a plain segment-partitioned window caps parallelism at
-    |segments| = 5 while each task carries n/5 of a value grain
-    ADVICE r8 established grows ~linearly with volume; the two-phase
-    form runs #segments × #buckets tasks, small_threshold keeps the
-    plain partitioned window below 2 M grain rows)."""
+    sum routes through windows.scalable_cumsum's part_cols (a plain
+    segment-partitioned window caps parallelism at |segments| = 5
+    while each task carries n/5 of a value grain that grows ~linearly
+    with volume; the two-phase form runs #segments × #buckets tasks,
+    small_threshold keeps the plain partitioned window below 2 M grain
+    rows)."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     t = o.join(
@@ -1890,12 +1889,11 @@ def q_auc_by_group(spark, sf_dir):
         F.sum("y").alias("pos"),
         (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
     )
-    r = win.scalable_part_cumsum(
+    r = win.scalable_cumsum(
         g,
-        ["segment"],
         "cents",
-        "neg",
-        "cum_inc",
+        {"cum_inc": "neg"},
+        part_cols=["segment"],
         small_threshold=win.SMALL_THRESHOLD_DEFAULT,
     ).select(
         "segment",

@@ -15,7 +15,7 @@ two-phase form here (SURVEY.md §4.4) keeps every step distributed:
 
 All in DataFrame ops, so Catalyst/AQE still optimize around it.
 
-CORRECTNESS NOTE (round 6, adversarial review): every two-phase helper
+CORRECTNESS NOTE: every two-phase helper
 branches its lineage at the bucket-stamped DataFrame — one branch takes
 the per-bucket window, the other the per-bucket totals — so the two
 branches MUST agree on every row's bucket id.  The original form
@@ -44,6 +44,7 @@ in, so they rank exactly as under a plain ``Window.orderBy``.
 from __future__ import annotations
 
 import threading as _threading
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -65,7 +66,7 @@ _MAX_BUCKETS = 2048
 SMALL_THRESHOLD_DEFAULT = 2_000_000
 
 
-#: Probe-input caches persisted by the scalable_* helpers (round 13).
+#: Probe-input caches persisted by the scalable_* helpers.
 #: Every helper that runs an EAGER action on its input at
 #: plan-construction time — the small_threshold count probe, or
 #: _bucketed_by_value's approxQuantile boundary pass — used to
@@ -79,24 +80,23 @@ SMALL_THRESHOLD_DEFAULT = 2_000_000
 #: q_weighted_quantile 1.98→1.62 s, q_roc_auc 1.00→0.91 s,
 #: q_energy_distance 1.41→1.16 s, q_anomaly_zscore 2.37→2.09 s; the
 #: one small loss is a tiny-input caller, q_cliffs_delta
-#: 0.60→0.71 s).  Applied ONLY on the count-probe
-#: sites: the same persist ahead of _bucketed_by_value's
-#: approxQuantile pass regressed the rank-based keys (see the note
-#: there) and was reverted.  Round-8 ADVICE removed an earlier probe
-#: cache because it
-#: had no safe unpersist point and leaked across long sessions; this
-#: tracker bounds that by keeping only the most recent
-#: _PROBE_CACHE_KEEP frames (the llmops signature-cache discipline) —
-#: eviction is a perf event, never a correctness one, and
-#: release_probe_caches() frees everything on demand.
+#: 0.60→0.71 s).  Applied ONLY on the count-probe sites
+#: (:func:`_probe_small`): the same persist ahead of
+#: _bucketed_by_value's approxQuantile pass regressed the rank-based
+#: keys (see the note there).  An untracked probe cache has no safe
+#: unpersist point — the returned plan reads it lazily — and leaks
+#: across long sessions; this tracker bounds that by keeping only the
+#: most recent _PROBE_CACHE_KEEP frames (the llmops signature-cache
+#: discipline) — eviction is a perf event, never a correctness one,
+#: and release_probe_caches() frees everything on demand.
 _LIVE_PROBE_CACHES: list[DataFrame] = []
 _PROBE_CACHE_LOCK = _threading.Lock()
 _PROBE_CACHE_KEEP = 4
 
-#: Serialized MEMORY_AND_DISK for the probe caches (round 14, VERDICT
-#: r13 task 7 — the llmops.SIG_CACHE_LEVEL rationale: compact byte
-#: blocks instead of JVM object graphs; timings flat at sf0.1, storage
-#: strictly lower — numbers in OPTIMIZATION_r14.md).
+#: Serialized MEMORY_AND_DISK for the probe caches (the
+#: llmops.SIG_CACHE_LEVEL rationale: compact byte blocks instead of JVM
+#: object graphs; timings flat at sf0.1, storage strictly lower —
+#: numbers in OPTIMIZATION_r14.md).
 from pyspark import StorageLevel as _StorageLevel
 
 _PROBE_CACHE_LEVEL = _StorageLevel(True, True, False, False, 1)
@@ -133,27 +133,39 @@ def _probe_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def _probe_release_if_large(df: DataFrame, n_in: int, threshold: int) -> None:
-    """Drop an over-threshold probe cache IMMEDIATELY (round-14 ADVICE):
-    only confirmed-small inputs stay cached.  At 100 TB an input that
-    fails the small-threshold probe is arbitrarily large, and holding
-    it in MEMORY_AND_DISK until keep-4 eviction is exactly the
-    executor memory/disk-pressure hazard the llmops shingle-table note
-    declines a persist over — the two-phase path's re-reads of the
-    frame are column-pruned scans, the cheaper price at that size.  A
+def _probe_small(
+    df: DataFrame, threshold: int, n_in: int | None = None
+) -> tuple[DataFrame, bool]:
+    """The small-input probe of the scalable_* helpers: ``(df, n ≤
+    threshold)``, counting ``df`` unless the caller knows its row count
+    ``n_in``.
+
+    The count is an eager action and the returned plan reads ``df``
+    again, so ``df`` is persisted first (:func:`_probe_persist`) and its
+    upstream lineage executes once; the returned frame is that cache.
+    An over-threshold frame is released at once: an input that fails
+    the probe is arbitrarily large at 100 TB, and holding it in
+    MEMORY_AND_DISK until keep-4 eviction is exactly the executor
+    memory/disk-pressure hazard the llmops shingle-table note declines
+    a persist over — the two-phase path's re-reads of the frame are
+    column-pruned scans, the cheaper price at that size.  A
     caller-persisted frame is never in the tracker and is left alone
     (their cache, their release point)."""
-    if n_in <= threshold:
-        return
-    with _PROBE_CACHE_LOCK:
+    if n_in is not None:
+        return df, n_in <= threshold
+    df = _probe_persist(df)
+    n_in = df.count()
+    if n_in > threshold:
+        with _PROBE_CACHE_LOCK:
+            try:
+                _LIVE_PROBE_CACHES.remove(df)
+            except ValueError:
+                return df, False
         try:
-            _LIVE_PROBE_CACHES.remove(df)
-        except ValueError:
-            return
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+            df.unpersist()
+        except Exception:
+            pass
+    return df, n_in <= threshold
 
 
 def _bsearch_bucket(col: Column, seq: list, descending: bool, lo: int, hi: int):
@@ -227,7 +239,7 @@ def _bucketed_by_value(
     bounds: list = []
     if n > 1:
         probs = [i / n for i in range(1, n)]
-        # NOT persisted here (round-13 measurement): an unconditional
+        # NOT persisted here (measured): an unconditional
         # persist ahead of this boundary pass regressed the rank-based
         # keys (q_quantile_sketch 2.7 s → 4.8 s, q_pinball_loss 2.0 s
         # → 2.3 s min-of-5 at sf0.1) — their inputs are cheap
@@ -304,147 +316,91 @@ def scalable_rank(
 def scalable_cumsum(
     df: DataFrame,
     order_col: str,
-    value_col: str,
-    out_col: str,
-    num_partitions: int | None = None,
-    small_threshold: int | None = None,
-    precomputed_count: int | None = None,
-) -> DataFrame:
-    """Globally ordered running sum without a single-task global window.
-
-    Requires ``order_col`` values to be unique per row (pre-aggregate
-    first — which the callers do, and which also bounds cardinality:
-    distances ≤ chromosome_length/resolution).
-
-    ``small_threshold``: when set, the input is counted (count skipped
-    when the caller passes ``precomputed_count``); at or below the
-    threshold a plain single-partition window is used — for
-    bounded-cardinality inputs the two-phase machinery (range
-    repartition + sampling + offset join) costs several extra jobs that
-    dwarf a one-task window.  The probe count does NOT cache the input
-    (round-8 ADVICE: a probe cache has no safe unpersist point — the
-    returned plan reads it lazily — so it leaked executor memory
-    across long sessions; the count scan is column-pruned, and callers
-    with expensive lineage should persist before calling or pass
-    ``precomputed_count``).  Pass None (default) to force the
-    two-phase form.
-    """
-    if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # the probe is an eager action and the returned plan reads
-            # df again: persist first (bounded tracker, see
-            # _probe_persist) so upstream lineage executes once; an
-            # over-threshold frame is released immediately (see
-            # _probe_release_if_large)
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.currentRow
-            )
-            return df.withColumn(out_col, F.sum(value_col).over(w))
-    parted = _bucketed_by_value(df, order_col, num_partitions)
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = parted.withColumn("_local_cum", F.sum(value_col).over(w_local))
-    # one row per partition → the offset computation is trivially small
-    totals = parted.groupBy("_pid").agg(F.sum(value_col).alias("_ptot"))
-    w_prefix = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_ptot").over(w_prefix), F.lit(0)).alias("_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_local_cum") + F.col("_off"))
-        .drop("_pid", "_local_cum", "_off")
-    )
-
-
-def scalable_cumsum_multi(
-    df: DataFrame,
-    order_col: str,
     sums: dict[str, str],
     tots: dict[str, str] | None = None,
+    part_cols: Sequence[str] = (),
+    descending: bool = False,
+    tiebreak: Sequence[str] = (),
     num_partitions: int | None = None,
     small_threshold: int | None = None,
     precomputed_count: int | None = None,
 ) -> DataFrame:
-    """Several globally ordered running sums (plus optional global
-    totals) sharing ONE value-deterministic bucketing pass — the
-    multi-column sibling of :func:`scalable_cumsum` for keys whose
-    prefix identity needs N cumulative columns over the same order
-    (energy distance: F/G per sample → 4 sums + 4 totals; calling
-    scalable_cumsum N times would re-bucket and re-probe N times).
+    """Globally ordered running sums without a single-task global window.
 
-    ``sums``: ``{out_col: value_col}`` running sums (inclusive,
-    UNBOUNDED PRECEDING..CURRENT ROW under ``order_col``); ``tots``:
-    ``{out_col: value_col}`` whole-frame sums attached to every row
-    (rides the same broadcast offsets frame — no extra shuffle and no
-    second unpartitioned window over data grain).  Same contracts as
-    scalable_cumsum: ``order_col`` unique per row (pre-aggregate
-    first), ``small_threshold`` keeps the plain one-task window at or
-    below the threshold so bounded-grain fixture plans stay unchanged.
+    ``sums``: ``{out_col: value_col}`` inclusive running sums
+    (UNBOUNDED PRECEDING..CURRENT ROW) over ``order_col`` — descending
+    when ``descending`` — then the ascending ``tiebreak`` columns.
+    ``tots``: ``{out_col: value_col}`` whole-frame sums attached to
+    every row.  With ``part_cols`` every sum and total restarts per
+    part, as under ``W.partitionBy(*part_cols)``, but parallelism is
+    #parts × #buckets instead of #parts.  All columns share ONE
+    bucketing pass and one probe.
+
+    The order must be total within a part: ``order_col`` unique per
+    row (pre-aggregate first, which also bounds cardinality: distances
+    ≤ chromosome_length/resolution), or made total by ``tiebreak``.
+
+    Value-deterministic buckets on ``order_col`` (module docstring) →
+    per-(part, bucket) running sums → per-(part, bucket) totals, whose
+    prefix offsets and part totals come from a window over that small
+    table → broadcast join back.
+
+    ``small_threshold``: when set, the input is counted
+    (:func:`_probe_small`; skipped when the caller passes
+    ``precomputed_count``) and at or below the threshold the plain
+    window is used — for bounded-cardinality inputs the two-phase
+    machinery costs several extra jobs that dwarf a one-task window.
+    Pass None (default) to force the two-phase form.
     """
     tots = tots or {}
+    lead = F.col(order_col).desc() if descending else F.col(order_col)
+    order = [lead, *tiebreak]
     if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # persist before the eager probe (see _probe_persist);
-            # over-threshold frames released immediately
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.currentRow
-            )
-            wall = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.unboundedFollowing
-            )
+        df, small = _probe_small(df, small_threshold, precomputed_count)
+        if small:
+            w = W.partitionBy(*part_cols).orderBy(*order)
+            run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+            whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
             for out, vc in sums.items():
-                df = df.withColumn(out, F.sum(vc).over(w))
+                df = df.withColumn(out, F.sum(vc).over(run))
             for out, vc in tots.items():
-                df = df.withColumn(out, F.sum(vc).over(wall))
+                df = df.withColumn(out, F.sum(vc).over(whole))
             return df
-    parted = _bucketed_by_value(df, order_col, num_partitions)
+    parted = _bucketed_by_value(df, order_col, num_partitions, descending)
+    keys = [*part_cols, "_pid"]
     w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
+        W.partitionBy(*keys)
+        .orderBy(*order)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     local = parted
     for out, vc in sums.items():
         local = local.withColumn("_lc_" + out, F.sum(vc).over(w_local))
-    # one row per bucket → offsets/totals computation is trivially small
+    # one row per (part, bucket) → offsets/totals are trivially small
     value_cols = sorted(set(sums.values()) | set(tots.values()))
-    totals = parted.groupBy("_pid").agg(
+    totals = parted.groupBy(*keys).agg(
         *[F.sum(vc).alias("_pt_" + vc) for vc in value_cols]
     )
-    w_prefix = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_pid").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    off_sel = [F.col("_pid")]
-    for out, vc in sums.items():
-        off_sel.append(
-            F.coalesce(F.sum("_pt_" + vc).over(w_prefix), F.lit(0)).alias(
+    w_pids = W.partitionBy(*part_cols).orderBy("_pid")
+    before = w_pids.rowsBetween(W.unboundedPreceding, -1)
+    whole = w_pids.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    offsets = totals.select(
+        *keys,
+        *[
+            F.coalesce(F.sum("_pt_" + vc).over(before), F.lit(0)).alias(
                 "_off_" + out
             )
-        )
-    for out, vc in tots.items():
-        off_sel.append(F.sum("_pt_" + vc).over(w_all).alias(out))
-    offsets = totals.select(*off_sel)
-    out_df = local.join(F.broadcast(offsets), "_pid")
-    for out in sums:
-        out_df = out_df.withColumn(
-            out, F.col("_lc_" + out) + F.col("_off_" + out)
-        ).drop("_lc_" + out, "_off_" + out)
-    return out_df.drop("_pid")
+            for out, vc in sums.items()
+        ],
+        *[F.sum("_pt_" + vc).over(whole).alias(out) for out, vc in tots.items()],
+    )
+    # the join moves its keys first: select restores the plain window's
+    # column order (input columns, then sums, then totals)
+    return local.join(F.broadcast(offsets), keys).select(
+        *df.columns,
+        *[(F.col("_lc_" + out) + F.col("_off_" + out)).alias(out) for out in sums],
+        *tots,
+    )
 
 
 def per_distance_totals(contacts_with_dist: DataFrame) -> DataFrame:
@@ -495,8 +451,7 @@ def equal_occupancy_assign(
     cum = scalable_cumsum(
         byd,
         "d",
-        "cc",
-        "cumcc",
+        {"cumcc": "cc"},
         small_threshold=small_threshold,
         precomputed_count=n_dists,
     )
@@ -533,7 +488,6 @@ def bh_fdr(
     m: int | None = None,
     tiebreak: list[str] | None = None,
     q_col: str = "q_value",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Benjamini–Hochberg q-values [P `fithic.py::benjamini_hochberg_correction`].
 
@@ -542,48 +496,39 @@ def bh_fdr(
     pass ``m`` explicitly for that semantics, default falls back to the
     observed row count.
 
-    When ``n_rows`` (the exact row count) is known, both the ascending
-    rank and the suffix-min collapse onto ONE descending window — rank
-    = n_rows − rn_desc + 1, suffix-min = running min over the same
-    frame — so the plan sorts once instead of twice.
+    ONE descending window over (p, tiebreak) gives both terms, so the
+    plan sorts once: the ascending rank is ``n + 1 − row_number``,
+    where n is ``count(*)`` over the whole frame of the same window
+    spec, and the suffix-min is a running min over that order.  Do NOT
+    rewrite the suffix-min as a min over [currentRow,
+    unboundedFollowing] on the ascending order: Spark executes
+    shrinking frames with UnboundedFollowingWindowFunctionFrame, which
+    recomputes the aggregate from scratch per row — O(n^2) per
+    partition (measured ~30x slower at 25k rows/partition).  Tied
+    (p, tiebreak) rows share one q-value under either order.
 
-    Global-order note: ranks use an unpartitioned window — fine for the
+    Global-order note: the window is unpartitioned — fine for the
     ≤10⁶-row significance tables this runs on after pre-aggregation; for
     larger inputs use :func:`bh_fdr_scalable` (§4.4).
     """
     tiebreak = tiebreak or []
     if m is None:
         m = df.count()
-    if n_rows is not None:
-        w_desc = W.orderBy(
-            F.col(p_col).desc(), *[F.col(c).desc() for c in tiebreak]
-        ).rowsBetween(W.unboundedPreceding, W.currentRow)
-        rk = F.lit(int(n_rows) + 1) - F.row_number().over(
-            W.orderBy(F.col(p_col).desc(), *[F.col(c).desc() for c in tiebreak])
-        )
-        q_raw = F.least(F.lit(1.0), F.col(p_col) * F.lit(float(m)) / rk)
-        return (
-            df.withColumn("_q_raw", q_raw)
-            .withColumn(q_col, F.min("_q_raw").over(w_desc))
-            .drop("_q_raw")
-        )
-    w_rank = W.orderBy(F.col(p_col), *[F.col(c) for c in tiebreak])
-    ranked = df.withColumn("_rk", F.row_number().over(w_rank))
-    q_raw = F.least(F.lit(1.0), F.col(p_col) * F.lit(float(m)) / F.col("_rk"))
-    ranked = ranked.withColumn("_q_raw", q_raw)
-    # Suffix-min as a running min over DESCENDING rank.  Do NOT rewrite
-    # as min over [currentRow, unboundedFollowing] on the ascending
-    # order: Spark executes shrinking frames with
-    # UnboundedFollowingWindowFunctionFrame, which recomputes the
-    # aggregate from scratch per row — O(n^2) per partition (measured
-    # ~30x slower at 25k rows/partition).  The extra sort is the cheap
-    # part.
-    w_min = (
-        W.orderBy(F.col("_rk").desc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    w = W.orderBy(F.col(p_col).desc(), *[F.col(c).desc() for c in tiebreak])
+    n = F.count(F.lit(1)).over(
+        w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     )
-    return ranked.withColumn(q_col, F.min("_q_raw").over(w_min)).drop(
-        "_rk", "_q_raw"
+    rk = n + 1 - F.row_number().over(w)
+    q_raw = F.least(F.lit(1.0), F.col(p_col) * F.lit(float(m)) / rk)
+    return (
+        df.withColumn("_q_raw", q_raw)
+        .withColumn(
+            q_col,
+            F.min("_q_raw").over(
+                w.rowsBetween(W.unboundedPreceding, W.currentRow)
+            ),
+        )
+        .drop("_q_raw")
     )
 
 
@@ -712,7 +657,7 @@ def scalable_trailing_aggs(
     """Trailing bounded-frame window aggregates — frame
     ``ROWS BETWEEN lookback PRECEDING AND (1 PRECEDING | CURRENT ROW)``
     over ``order_cols`` within ``part_cols`` — WITHOUT one task per
-    partition value (round 7; the q_anomaly_zscore modernization).
+    partition value (the q_anomaly_zscore spine).
 
     ``W.partitionBy(event_type)`` parallelism equals the number of
     distinct partition values: with a handful of event types, 100 TB of
@@ -742,26 +687,18 @@ def scalable_trailing_aggs(
     a part (add a tiebreak column); the leading order column must be
     numeric (:func:`_bucketed_by_value`'s contract).
 
-    ``small_threshold``: when set, the input is counted and at or
-    below the threshold the plain partitioned window is used — the
-    bounded-grain fast path of :func:`scalable_cumsum`, because the
-    two-phase machinery costs several extra jobs that dwarf small
-    inputs.  The probe count does NOT cache the input (round-8 ADVICE:
-    a probe cache has no safe unpersist point — the returned plan
-    reads it lazily — so it leaked executor memory across long
-    sessions; the count scan is column-pruned, and callers with
-    expensive lineage should persist before calling).  Pass None to
-    force the scalable form.
+    ``small_threshold``: when set, the input is counted
+    (:func:`_probe_small`) and at or below the threshold the plain
+    partitioned window is used — the bounded-grain fast path of
+    :func:`scalable_cumsum`, because the two-phase machinery costs
+    several extra jobs that dwarf small inputs.  Pass None to force
+    the scalable form.
     """
     lo = -int(lookback)
     hi = 0 if include_current else -1
     if small_threshold:
-        # persist before the eager probe (see _probe_persist);
-        # over-threshold frames released immediately
-        df = _probe_persist(df)
-        n_in = df.count()
-        _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
+        df, small = _probe_small(df, small_threshold)
+        if small:
             w = (
                 W.partitionBy(*part_cols)
                 .orderBy(*order_cols)
@@ -815,7 +752,7 @@ def scalable_part_rank(
     """Exact per-partition row_number over ``order_cols`` within
     ``part_cols`` WITHOUT one task per partition value — the per-part
     generalization of :func:`scalable_rank` (factored out of
-    :func:`scalable_trailing_aggs` phase 1–2, round 7).
+    :func:`scalable_trailing_aggs` phase 1–2).
 
     ``W.partitionBy(part).orderBy(...)`` row_number serializes each
     partition value onto one task; with few values (shards, event
@@ -849,72 +786,6 @@ def scalable_part_rank(
         d.join(offs, [*part_cols, "_pid"])
         .withColumn(rank_col, (F.col("_lr") + F.col("_off")).cast("long"))
         .drop("_pid", "_lr", "_off")
-    )
-
-
-def scalable_part_cumsum(
-    df: DataFrame,
-    part_cols: list[str],
-    order_col: str,
-    value_col: str,
-    out_col: str,
-    num_partitions: int | None = None,
-    small_threshold: int | None = None,
-    precomputed_count: int | None = None,
-) -> DataFrame:
-    """Per-partition globally ordered running sum WITHOUT one task per
-    partition value — the per-part sibling of :func:`scalable_cumsum`
-    (factored for q_auc_by_group's per-slice prefix spine, round 10:
-    ``W.partitionBy(segment)`` serializes each slice onto ONE task, so
-    a 5-value segment column caps parallelism at 5 while each task
-    still carries n/5 of a value grain that grows with volume).
-
-    Value-deterministic buckets on ``order_col`` (frozen quantile
-    literals — every lineage branch agrees) → per-(part, bucket)
-    running sum → broadcast per-part prefix offsets.  Parallelism is
-    #parts × #buckets.  ``order_col`` must be unique per row WITHIN a
-    part (pre-aggregate first).  ``small_threshold``: same contract as
-    :func:`scalable_cumsum` — at or below, the plain partitioned
-    window (bounded-grain fixture plans unchanged)."""
-    if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # persist before the eager probe (see _probe_persist);
-            # over-threshold frames released immediately
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = (
-                W.partitionBy(*part_cols)
-                .orderBy(order_col)
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            return df.withColumn(out_col, F.sum(value_col).over(w))
-    parted = _bucketed_by_value(df, order_col, num_partitions)
-    w_local = (
-        W.partitionBy(*part_cols, "_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = parted.withColumn("_lc", F.sum(value_col).over(w_local))
-    totals = parted.groupBy(*part_cols, "_pid").agg(
-        F.sum(value_col).alias("_pt")
-    )
-    w_pre = (
-        W.partitionBy(*part_cols)
-        .orderBy("_pid")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        *part_cols,
-        "_pid",
-        F.coalesce(F.sum("_pt").over(w_pre), F.lit(0)).alias("_off"),
-    )
-    return (
-        local.join(F.broadcast(offs), [*part_cols, "_pid"])
-        .withColumn(out_col, F.col("_lc") + F.col("_off"))
-        .drop("_pid", "_lc", "_off")
     )
 
 

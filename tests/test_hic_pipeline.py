@@ -529,13 +529,15 @@ def test_unknown_contact_type_is_rejected(spark):
 
 
 @pytest.mark.parametrize("n_total", [None, 10**18])
-@pytest.mark.parametrize("rows", ["table", "empty"])
+@pytest.mark.parametrize("rows", ["table", "empty", "zero"])
 def test_fit_null_curve_routes_equal(spark, n_total, rows):
     """fit_null_curve over one per-distance table, with the census as
     driver arrays (numpy binning) and as a DataFrame (distributed
     binning): the bin-stats frame, the curve and the totals are equal
     bit for bit.  Two of the table's distances are missing from the
-    census, so both routes fall back to the observed pair count."""
+    census, so both routes fall back to the observed pair count.  A
+    table of zero counts (avg_dist and prob are 0/0) fits the
+    degenerate zero curve with totals (0, Σpairs), not a NaN curve."""
     from pfithic_spark import hic
 
     rng = np.random.default_rng(43)
@@ -547,6 +549,9 @@ def test_fit_null_curve_routes_equal(spark, n_total, rows):
         ]
         census = [(d, 300 - d) for d in range(1, 39)]
         census.append((10**7, 1))  # a census distance with no contacts
+    elif rows == "zero":
+        byd = [(d, 0, d % 3 + 1) for d in range(1, 9)]
+        census = [(d, 50 - d) for d in range(1, 9)]
     else:
         byd, census = [], []
     byd_df = spark.createDataFrame(byd, "d long, cc long, np long")
@@ -574,7 +579,39 @@ def test_fit_null_curve_routes_equal(spark, n_total, rows):
         assert a_pdf["n_possible"].sum() == sum(300 - d for d in range(1, 39)) + fallback
         assert len(a_pdf) > 1
     else:
-        assert len(a_pdf) == 0 and a_tot == (0, 0)
+        assert a_tot == (0, sum(r[2] for r in byd))
+        assert a_gx.tolist() == [0.0, 1.0] and a_gy.tolist() == [0.0, 0.0]
+        # zero counts all land in bin 0
+        assert a_pdf["prob"].tolist() == ([0.0] if byd else [])
+
+
+def test_run_significance_all_zero_counts(spark):
+    """Contacts whose counts are all 0 score p = q = 1.0 through the
+    zero curve, not NaN, with the grid census (1 and 2 passes) and the
+    res=0 fragment census."""
+    from pfithic_spark import hic
+    from pfithic_spark.io import CONTACTS_SCHEMA
+
+    mids = [2500 + 5000 * i for i in range(12)]
+    rows = [
+        ("chr1", a, "chr1", b, 0) for i, a in enumerate(mids) for b in mids[i + 1 :]
+    ]
+    contacts = spark.createDataFrame(rows, CONTACTS_SCHEMA)
+    frags = spark.createDataFrame([("chr1", m) for m in mids], "chr string, mid long")
+    runs = [
+        dict(chr_nbins=[("chr1", 12)], cfg=hic.SigConfig(n_bins=5, passes=passes))
+        for passes in (1, 2)
+    ]
+    runs.append(
+        dict(
+            fragments=frags,
+            cfg=hic.SigConfig(resolution=0, n_bins=5, dist_hi=10**6),
+        )
+    )
+    for kw in runs:
+        got = hic.run_significance(spark, contacts, **kw).collect()
+        assert len(got) == len(rows)
+        assert {(r["p_value"], r["q_value"]) for r in got} == {(1.0, 1.0)}
 
 
 def test_candidate_plan_scores_once_per_side(spark, monkeypatch):

@@ -231,7 +231,7 @@ def test_forced_two_phase_paths(spark):
     df = spark.range(n).select(
         F.col("id").alias("d"), ((F.col("id") * 37) % 97 + 1).alias("cc")
     )
-    two = win.scalable_cumsum(df, "d", "cc", "run", small_threshold=None)
+    two = win.scalable_cumsum(df, "d", {"run": "cc"}, small_threshold=None)
     plan = _plan(two)
     assert "_pid" in plan, "running window must partition by _pid"
     # bucket ids must be a pure function of the order VALUE, never the
@@ -261,19 +261,19 @@ def test_forced_two_phase_paths(spark):
 
 
 def test_probe_cache_released_when_over_threshold(spark):
-    """Round-14 ADVICE (windows._probe_persist): the small-threshold
-    count probe persists its input so the returned plan's re-reads hit
-    cache, but an input that FAILS the probe — the at-scale path,
-    where the frame is arbitrarily large — must be unpersisted
-    immediately instead of squatting in MEMORY_AND_DISK until keep-4
-    eviction.  Only confirmed-small frames stay cached."""
+    """windows._probe_small: the small-threshold count probe persists
+    its input so the returned plan's re-reads hit cache, but an input
+    that FAILS the probe — the at-scale path, where the frame is
+    arbitrarily large — must be unpersisted immediately instead of
+    squatting in MEMORY_AND_DISK until keep-4 eviction.  Only
+    confirmed-small frames stay cached."""
     from pfithic_spark import windows as win
 
     win.release_probe_caches()
     small = spark.range(100).select(
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
-    win.scalable_cumsum(small, "d", "v", "run", small_threshold=1000)
+    win.scalable_cumsum(small, "d", {"run": "v"}, small_threshold=1000)
     assert len(win._LIVE_PROBE_CACHES) == 1
     assert win._LIVE_PROBE_CACHES[0].is_cached
     win.release_probe_caches()
@@ -281,7 +281,7 @@ def test_probe_cache_released_when_over_threshold(spark):
     big = spark.range(5000).select(
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
-    out = win.scalable_cumsum(big, "d", "v", "run", small_threshold=1000)
+    out = win.scalable_cumsum(big, "d", {"run": "v"}, small_threshold=1000)
     assert win._LIVE_PROBE_CACHES == [], "over-threshold frame must be released"
     # the two-phase path still computes correctly after the release
     got = {
@@ -292,13 +292,13 @@ def test_probe_cache_released_when_over_threshold(spark):
 
 
 def test_scalable_cumsum_multi_two_phase(spark):
-    """scalable_cumsum_multi (round-10, q_energy_distance spine):
-    the forced two-phase path must equal the plain one-task window
-    forms for EVERY requested running sum and global total, under
-    reuse-off/AQE-off flags (the round-6 branch-consistency gate —
-    all lineage branches must derive identical _pid from the frozen
-    boundary literals), and its plan must partition every data-grain
-    window by _pid."""
+    """scalable_cumsum with several sums and totals (the
+    q_energy_distance spine): the forced two-phase path must equal the
+    plain one-task window forms for EVERY requested running sum and
+    global total, under reuse-off/AQE-off flags (the branch-consistency
+    gate — all lineage branches must derive identical _pid from the
+    frozen boundary literals), and its plan must partition every
+    data-grain window by _pid."""
     from pyspark.sql import Window as W
 
     from pfithic_spark import windows as win
@@ -321,7 +321,7 @@ def test_scalable_cumsum_multi_two_phase(spark):
             old[k] = None
         spark.conf.set(k, val)
     try:
-        got = win.scalable_cumsum_multi(
+        got = win.scalable_cumsum(
             df,
             "v",
             sums={"ca": "a", "cb": "b"},
@@ -353,6 +353,101 @@ def test_scalable_cumsum_multi_two_phase(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, val)
+
+
+@pytest.mark.parametrize("variant", ["part", "part_tots", "desc_tiebreak"])
+def test_scalable_cumsum_two_phase_variants(spark, variant):
+    """The forced two-phase scalable_cumsum equals the plain window
+    exactly, in values and column order, under reuse-off/AQE-off
+    flags, in the forms its callers use besides one global sum:
+    per-part running sums (q_auc_by_group), per-part sums with
+    per-part totals, and a descending leading column with ties, NULLs
+    and an ascending tiebreak (compaction_plan's next-fit order)."""
+    from pyspark.sql import Window as W
+
+    from pfithic_spark import windows as win
+
+    n = 60_000
+    df = spark.range(n).select(
+        "id",
+        (F.col("id") % 5).alias("seg"),
+        F.when(F.col("id") % 1000 == 0, F.lit(None))
+        .otherwise(F.abs(F.xxhash64("id")) % 3000)
+        .alias("v"),
+        ((F.col("id") * 37) % 97 + 1).alias("a"),
+    )
+    if variant == "desc_tiebreak":
+        kw = dict(order_col="v", descending=True, tiebreak=["id"])
+        w = W.orderBy(F.col("v").desc(), "id")
+    else:
+        kw = dict(order_col="id", part_cols=["seg"])
+        w = W.partitionBy("seg").orderBy("id")
+    tots = {"t": "a"} if variant == "part_tots" else {}
+    exp = df.select(
+        "id",
+        F.sum("a").over(w.rowsBetween(W.unboundedPreceding, 0)).alias("c"),
+        *[
+            F.sum("a")
+            .over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+            .alias(out)
+            for out in tots
+        ],
+    )
+    confs = {
+        "spark.sql.exchange.reuse": "false",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, val in confs.items():
+        spark.conf.set(k, val)
+    try:
+        got = win.scalable_cumsum(
+            df, sums={"c": "a"}, tots=tots, small_threshold=None, **kw
+        )
+        assert "_pid" in _plan(got)
+        cols = ["c", *tots]
+        # the plain window's column order, whichever route ran
+        assert got.columns == [*df.columns, *cols]
+        g = got.select("id", *[F.col(c).alias("g_" + c) for c in cols])
+        bad = (
+            g.join(exp, "id")
+            .filter(
+                " OR ".join(f"NOT (g_{c} <=> {c})" for c in cols)
+            )
+            .count()
+        )
+        assert bad == 0 and got.count() == n
+    finally:
+        for k, val in old.items():
+            if val is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, val)
+
+
+def test_bh_fdr_sorts_once(spark):
+    """bh_fdr's executed plan holds exactly ONE Sort: the ascending
+    rank is count(*) over the whole frame + 1 − row_number() in the
+    same descending window that takes the suffix-min, so no caller
+    needs to know the row count for the single-sort plan."""
+    import re
+
+    from pfithic_spark import windows as win
+
+    n = 5000
+    df = spark.range(n).select(
+        "id",
+        (((F.col("id") * 7919) % 1003).cast("double") / 1003.0).alias(
+            "p_value"
+        ),
+    )
+    out = win.bh_fdr(df, "p_value", m=3 * n, tiebreak=["id"])
+    assert len(out.collect()) == n
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    sorts = re.findall(r"(?m)^[\s:+|-]*(?:\*\(\d+\) )?Sort \[", plan.toString())
+    assert len(sorts) == 1, plan.toString()
 
 
 def test_scalable_rank_survives_disabled_exchange_reuse(spark):
@@ -398,7 +493,7 @@ def test_scalable_rank_survives_disabled_exchange_reuse(spark):
         # cummax branch at the identical point
         uniq = df.groupBy("id").agg(F.max("v").alias("val"))
         cs = win.scalable_cumsum(
-            uniq, "id", "val", "run", small_threshold=None
+            uniq, "id", {"run": "val"}, small_threshold=None
         )
         w_all = W.orderBy("id").rowsBetween(W.unboundedPreceding, 0)
         cs_exp = uniq.withColumn("run", F.sum("val").over(w_all))

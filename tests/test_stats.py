@@ -265,11 +265,11 @@ from hypothesis import strategies as hs
     extra_m=hs.integers(min_value=0, max_value=50),
 )
 def test_bh_fdr_matches_numpy_reference(spark, ps, extra_m):
-    """Both BH forms (single-window and two-phase scalable) must match
-    a pure-numpy Benjamini–Hochberg reference — q_i = min_{j>=i}
-    min(1, p_j·M/j) over ascending p — for ARBITRARY p-value sets
-    (duplicates, zeros, ones) and M ≥ n (the possible-pairs semantics
-    where M exceeds the observed row count)."""
+    """Both BH forms (single-window and two-phase scalable — the two
+    hic._bh routes) must match a pure-numpy Benjamini–Hochberg
+    reference — q_i = min_{j>=i} min(1, p_j·M/j) over ascending p —
+    for ARBITRARY p-value sets (duplicates, zeros, ones) and M ≥ n (the
+    possible-pairs semantics where M exceeds the observed row count)."""
     import numpy as np
 
     from pfithic_spark import windows as win
@@ -286,11 +286,16 @@ def test_bh_fdr_matches_numpy_reference(spark, ps, extra_m):
     # suffix min over ascending-p order
     q_sorted = np.minimum.accumulate(q_sorted[::-1])[::-1]
     want = dict(zip(np.arange(n)[order].tolist(), q_sorted.tolist()))
-    for form in (win.bh_fdr, win.bh_fdr_scalable):
+    # without a tiebreak, tied p-values rank in any order but share one q
+    for form, tb in (
+        (win.bh_fdr, ["rid"]),
+        (win.bh_fdr, None),
+        (win.bh_fdr_scalable, ["rid"]),
+    ):
         got = {
             r["rid"]: r["q_value"]
-            for r in form(df, "p_value", m=m, tiebreak=["rid"]).collect()
+            for r in form(df, "p_value", m=m, tiebreak=tb).collect()
         }
         assert set(got) == set(want)
         for rid, q in want.items():
-            assert abs(got[rid] - q) < 1e-12, (form.__name__, rid, got[rid], q)
+            assert abs(got[rid] - q) < 1e-12, (form.__name__, tb, rid, got[rid], q)

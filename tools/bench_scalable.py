@@ -54,7 +54,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    cum = win.scalable_cumsum(df, "d", "cc", "run", small_threshold=None)
+    cum = win.scalable_cumsum(df, "d", {"run": "cc"}, small_threshold=None)
     # force full evaluation + correctness: the global total must match
     # the closed form, and a probed key must match the prefix sum
     total = cum.agg(F.max("run")).collect()[0][0]
@@ -75,7 +75,7 @@ def main() -> None:
 
     # the single-window form at the same scale, for the honest ratio
     t0 = time.time()
-    bh1 = win.bh_fdr(scored, "p_value", m=n, tiebreak=["d"], n_rows=n)
+    bh1 = win.bh_fdr(scored, "p_value", m=n, tiebreak=["d"])
     bh1.agg(F.min("q_value"), F.max("q_value")).collect()
     bh_single_s = time.time() - t0
 

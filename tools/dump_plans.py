@@ -254,7 +254,7 @@ PICKS = {
         "prune; distances are exact micro-quantized int64."
     ),
     "q_stratified_conformal": (
-        "Per-segment conformal q-hat (round 10): residual rank rides "
+        "Per-segment conformal q-hat: residual rank rides "
         "scalable_part_rank ((segment, _pid) windows); 5-row "
         "stats/q-hat frames broadcast back; residuals exact via "
         "n-scaling."
