@@ -440,6 +440,11 @@ def fit_null_curve(
 #: with the distributed BH instead
 OUTLIER_CANDIDATE_CAP = 1_000_000
 
+#: most scored rows (intra plus inter) the BH-FDR ranks with the
+#: single-window :func:`windows.bh_fdr`; above it :func:`_bh` takes the
+#: two-phase :func:`windows.bh_fdr_scalable`
+BH_SINGLE_WINDOW_ROWS = 200_000
+
 
 def _outlier_cols() -> list:
     """What a refinement pass keeps of each outlier: enough to take it
@@ -543,13 +548,14 @@ def _per_distance_np(outliers: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _bh(combined: DataFrame, m: int, n_rows) -> DataFrame:
+def _bh(combined: DataFrame, m: int, n: int) -> DataFrame:
     """BH-FDR q-values over every scored row (the final pass, and a
-    refinement pass over the candidate cap).  Over 200 k intra rows
-    (``n_rows``) the two-phase :func:`windows.bh_fdr_scalable`, else
+    refinement pass over the candidate cap).  Over
+    :data:`BH_SINGLE_WINDOW_ROWS` scored rows (``n``, intra plus inter)
+    the two-phase :func:`windows.bh_fdr_scalable`, else
     :func:`windows.bh_fdr`, which sorts once in every contact_type."""
     tiebreak = ["chr1", "chr2", "mid1", "mid2"]
-    if (n_rows or 0) > 200_000:
+    if n > BH_SINGLE_WINDOW_ROWS:
         return win.bh_fdr_scalable(combined, "p_value", m=m, tiebreak=tiebreak)
     return win.bh_fdr(combined, "p_value", m=m, tiebreak=tiebreak)
 
@@ -742,22 +748,21 @@ def run_significance(
             # BH's range repartition SAMPLES its input, which would re-run
             # the whole scoring UDF lineage once per downstream job
             combined = combined.cache()
-            scored = _bh(combined, m_bh, n_rows)
+            scored = _bh(combined, m_bh, (n_rows or 0) + n_inter_rows)
             break
         # refine: remove this pass's outliers (q < outlier_q) from the
         # next fit [SC-7]
         outliers = None
+        n_scored = n_rows + n_inter_rows
         if cfg.outlier_q <= 1:
-            outliers = _bh_outliers(
-                combined, n_rows + n_inter_rows, m_bh, cfg.outlier_q
-            )
+            outliers = _bh_outliers(combined, n_scored, m_bh, cfg.outlier_q)
         if outliers is not None:
             out_byd = _per_distance_np(outliers)
         else:
             # over the candidate cap: rank every row, and keep the
             # outliers on the cluster
             combined = combined.cache()
-            ranked = _bh(combined, m_bh, n_rows).filter(
+            ranked = _bh(combined, m_bh, n_scored).filter(
                 F.col("q_value") < cfg.outlier_q
             )
             out_df = ranked.select(*_outlier_cols())

@@ -19,20 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Storage level for the bounded signature/band/probe caches (round 14,
-#: VERDICT r13 task 7): MEMORY_AND_DISK **serialized** — the default
-#: deserialized level stores the columnar CachedBatch objects as JVM
-#: object graphs; the serialized form stores them as compact byte
-#: blocks, trading a small deser cost per read for lower storage
-#: memory and cheaper GC at 100 TB signature-table sizes.  Measured at
-#: sf0.1 (tools/measure_cache_storage.py): timings flat within the
-#: noise band, cached bytes strictly lower; numbers in
-#: OPTIMIZATION_r14.md.
-SIG_CACHE_LEVEL = StorageLevel(True, True, False, False, 1)
+from .session import persist_bounded
 
 # --- normalization / fingerprints ---------------------------------------
 
@@ -579,21 +569,20 @@ def _drop_hot_buckets(
     the count job at DataFrame-build time (registry keys execute
     immediately after construction, so the trade is one job, not a
     surprise; the public pair generators' docstrings carry the same
-    note).  ``banded`` is persisted (tracked, so
-    release_signature_caches / the next generator call frees it)
-    BEFORE the probe: the probe's count job materializes it once, the
-    candidate self-join's two reads then hit the cache instead of
-    re-deriving the band explode, and the collected hot list describes
-    the same materialized snapshot the join will read (round-8 ADVICE:
-    the unpersisted pipeline re-executed per reader, and the frozen
-    hot list could describe different data than the join saw).  The
-    frozen list is still construction-time state: if the underlying
-    files change before the plan runs AND the cache is evicted, a
-    newly-hot bucket is not capped — re-call the generator on changed
-    data."""
+    note).  ``banded`` is persisted into the bounded pool
+    (:func:`session.persist_bounded`) BEFORE the probe: the probe's
+    count job materializes it once, the candidate self-join's two reads
+    then hit the cache instead of re-deriving the band explode, and the
+    collected hot list describes the same materialized snapshot the
+    join will read (unpersisted, the pipeline re-executed per reader,
+    and the frozen hot list could describe different data than the
+    join saw).  The frozen list is still construction-time state: if
+    the underlying files change before the plan runs AND the cache is
+    evicted, a newly-hot bucket is not capped — re-call the generator
+    on changed data."""
     if max_bucket is None:
         return banded
-    banded = _track_sig_cache(banded.persist(SIG_CACHE_LEVEL))
+    banded = persist_bounded(banded)
     hot = (
         banded.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_bn"))
@@ -659,17 +648,16 @@ def minhash_lsh_pairs(
         for i, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
     ]
     # cached: the band join + the two signature re-joins below read the
-    # table three times.  Tracked (not bare .cache()) so the next pair-
-    # generator call — or release_signature_caches() — frees it instead
-    # of accruing executor memory across a many-corpus session.
-    sigs = _track_sig_cache(
+    # table three times.  In the bounded pool (not bare .cache()), so
+    # later generator calls evict it instead of accruing executor
+    # memory across a many-corpus session.
+    sigs = persist_bounded(
         hashed.groupBy("doc_id")
         .agg(*mins)
         .select(
             "doc_id",
             F.array(*[f"_m{i}" for i in range(_MINHASH_N)]).alias("sig"),
         )
-        .persist(SIG_CACHE_LEVEL)
     )
     banded = sigs.select(
         "doc_id",
@@ -718,51 +706,6 @@ def minhash_lsh_pairs(
         .select("id1", "id2", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= est_threshold)
     )
-
-
-#: Signature/band tables cached by minhash_lsh_pairs / simhash_pairs
-#: (each generator tracks its signature table AND, when the hot-bucket
-#: cap is active, its banded table), kept so the pair generators'
-#: self-joins read them without recompute.  Tracked here so long-lived
-#: sessions sweeping many corpora never accrue executor memory: the
-#: tracker keeps only the FOUR most recent caches — two frames per
-#: generator, so building a minhash and a simhash pipeline before
-#: materializing either (the common interleave) keeps both warm —
-#: evicting older ones; callers can force release with
-#: release_signature_caches().  Eviction is only a perf event:
-#: unpersist never invalidates a lazy result, it just recomputes.
-import threading as _threading
-
-_LIVE_SIG_CACHES: list[DataFrame] = []
-_SIG_CACHE_LOCK = _threading.Lock()
-_SIG_CACHE_KEEP = 4
-
-
-def release_signature_caches() -> None:
-    """Unpersist signature tables cached by the LSH pair generators.
-
-    Safe at any time — unpersist never invalidates a result, it only
-    forces recompute for readers that have not materialized yet."""
-    with _SIG_CACHE_LOCK:
-        drop, _LIVE_SIG_CACHES[:] = _LIVE_SIG_CACHES[:], []
-    for df in drop:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _track_sig_cache(df: DataFrame) -> DataFrame:
-    with _SIG_CACHE_LOCK:
-        _LIVE_SIG_CACHES.append(df)
-        drop = _LIVE_SIG_CACHES[:-_SIG_CACHE_KEEP]
-        _LIVE_SIG_CACHES[:] = _LIVE_SIG_CACHES[-_SIG_CACHE_KEEP:]
-    for old in drop:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
 
 
 # --- SimHash -------------------------------------------------------------
@@ -843,13 +786,10 @@ def simhash_pairs(
         )
     width = 64 // bands
     mask = (1 << width) - 1
-    # cached because the self-join reads the signature table twice;
-    # tracked so the next pair-generator call (or an explicit
-    # release_signature_caches()) frees it — no growth across a
-    # many-corpus session
-    sigs = _track_sig_cache(
-        simhash_signatures(docs, text_col, id_col).persist(SIG_CACHE_LEVEL)
-    )
+    # cached because the self-join reads the signature table twice; in
+    # the bounded pool, so there is no growth across a many-corpus
+    # session
+    sigs = persist_bounded(simhash_signatures(docs, text_col, id_col))
     chunk = F.explode(
         F.array(
             *[
@@ -2132,12 +2072,12 @@ def lsh_cosine_pairs(
                 (F.col(f"d{j}") >= 0).cast("long") * F.lit(1 << k)
             )
         band_cols.append(expr.alias(f"band{b}"))
-    # signature table CACHED (the _track_sig_cache discipline of
+    # signature table CACHED in the bounded pool (as in
     # minhash_lsh_pairs): a per-band join over uncached signatures
     # would re-run the posexplode+groupBy build once per band per join
     # side — measured as 4 signature passes / 6 source scans with
     # zero exchange reuse (column pruning makes each subtree distinct)
-    sig = _track_sig_cache(dots.select("id", *band_cols).persist(SIG_CACHE_LEVEL))
+    sig = persist_bounded(dots.select("id", *band_cols))
     banded = sig.select(
         "id",
         F.explode(

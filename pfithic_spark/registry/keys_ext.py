@@ -20,7 +20,7 @@ from .. import streaming as strm  # noqa: F401
 from .. import windows as win  # noqa: F401
 from ..io import epoch_us, load_table  # noqa: F401
 from ..llmops import dot_double, knuth_hash, l2_norm  # noqa: F401
-from ..session import ensure_engine_confs  # noqa: F401
+from ..session import ensure_engine_confs, persist_bounded  # noqa: F401
 from ._core import (  # noqa: F401
     DIST_HI,
     DIST_LO,
@@ -323,9 +323,8 @@ def q_bm25(spark, sf_dir):
         ],
     )
     # doc-grain invariant read by two consumers (stats and scoring);
-    # output is corpus-keyed, so the shared keep-4 eviction pool owns
-    # the release (q_lm_score discipline)
-    wide = llmops._track_sig_cache(wide.persist(llmops.SIG_CACHE_LEVEL))
+    # output is corpus-keyed, so the bounded cache pool owns the release
+    wide = persist_bounded(wide)
     stats_df = wide.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avg_dl"),
@@ -976,21 +975,18 @@ def q_pmi_bigrams(spark, sf_dir):
     Rank is on the ROUNDED pmi with (w1, w2) tie-breakers
     (FIXTURES.md §5.5); the pre-round expression is one fixed-order
     IEEE chain, identical in both dialects."""
-    out, invariants = pmi_bigrams_lazy(spark, sf_dir)
-    # vocabulary-bounded bigram-count cache released by the shared
-    # keep-4 eviction pool (q_lm_score discipline) — cheaper than an
-    # eager checkpoint, which pays a full construction-time job
-    # (measured 1.85× vs 1.4× at sf0.1)
-    for inv in invariants:
-        llmops._track_sig_cache(inv)
+    out, _ = pmi_bigrams_lazy(spark, sf_dir)
     return out
 
 
 def pmi_bigrams_lazy(spark, sf_dir):
     """Lazy dataflow for q_pmi_bigrams: returns (out, [pc]) with the
-    bigram-count table persisted and NOT yet unpersisted, no
+    bigram-count table persisted in the bounded cache pool, no
     checkpoint — the plan gate reads the executed plan off `out`
-    (pagerank_lazy / open_order_backlog_lazy split)."""
+    (pagerank_lazy / open_order_backlog_lazy split).  The pool releases
+    the vocabulary-bounded table, which is cheaper than an eager
+    checkpoint: that pays a full construction-time job (measured 1.85×
+    vs 1.4× at sf0.1)."""
     d = load_table(spark, sf_dir, "documents")
     arr = F.split(llmops.norm_text("text"), " ")
     pairs = d.select(
@@ -1004,7 +1000,7 @@ def pmi_bigrams_lazy(spark, sf_dir):
     pc = pairs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("c12")
     )
-    pc = pc.persist(llmops.SIG_CACHE_LEVEL)
+    pc = persist_bounded(pc)
     n_df = pc.agg(F.sum("c12").alias("n"))
     c12 = pc.filter(F.col("c12") >= _PMI_MIN_COUNT)
     c1 = pc.groupBy("w1").agg(F.sum("c12").alias("c1"))

@@ -20,7 +20,7 @@ from .. import streaming as strm  # noqa: F401
 from .. import windows as win  # noqa: F401
 from ..io import epoch_us, load_table  # noqa: F401
 from ..llmops import dot_double, knuth_hash, l2_norm  # noqa: F401
-from ..session import ensure_engine_confs  # noqa: F401
+from ..session import ensure_engine_confs, persist_bounded  # noqa: F401
 from ._core import (  # noqa: F401
     DIST_HI,
     DIST_LO,
@@ -472,9 +472,8 @@ def q_lm_score(spark, sf_dir):
     # vocabulary-bounded model table read by three consumers (c1, the
     # scoring join's build side twice); the output is corpus-keyed so
     # there is no bounded materialization point to unpersist behind —
-    # registered in the shared eviction pool instead (keep-4, the LSH
-    # signature-cache discipline)
-    pc = llmops._track_sig_cache(pc.persist(llmops.SIG_CACHE_LEVEL))
+    # the bounded cache pool owns it instead
+    pc = persist_bounded(pc)
     c1 = pc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     scored = (
         bi.join(pc, ["w1", "w2"])

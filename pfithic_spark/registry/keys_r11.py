@@ -29,6 +29,7 @@ from .. import io as pio
 from .. import llmops  # noqa: F401
 from .. import windows as win  # noqa: F401
 from ..io import epoch_us, load_table  # noqa: F401
+from ..session import persist_bounded
 from ._core import _GOLDEN_DIR, register  # noqa: F401
 
 # ========================================================================
@@ -1712,16 +1713,16 @@ def minhash_calibration_from(
         "doc_id",
         F.array_distinct(llmops.tokens_col("text")).alias("toks"),
     )
-    # Persist the signature table (round 13, guide §2.4/§5): the
-    # 8-md5-per-token projection is THE expensive stage here, and it
-    # previously appeared as an independent subtree ~5× in one plan —
-    # via m1/m2 (the estimator join) and via md5_minhash_band_rows(d)
-    # whose band rows feed the hot-bucket aggregate, the anti-join
-    # left side, and both sides of the candidate self-join.  One
-    # cached (doc_id, h1..h8) table — 8 hex strings per doc — now
-    # serves all of them; band rows derive from the cache.  Tracked
-    # like the other LSH signature caches (bounded keep-4 tracker).
-    m = llmops._track_sig_cache(llmops.md5_minhash_signatures(d).persist(llmops.SIG_CACHE_LEVEL))
+    # Persist the signature table: the 8-md5-per-token projection is
+    # THE expensive stage here, and uncached it appeared as an
+    # independent subtree ~5× in one plan — via m1/m2 (the estimator
+    # join) and via md5_minhash_band_rows(d) whose band rows feed the
+    # hot-bucket aggregate, the anti-join left side, and both sides of
+    # the candidate self-join.  One cached (doc_id, h1..h8) table — 8
+    # hex strings per doc — serves all of them; band rows derive from
+    # the cache.  Held by the bounded cache pool, like the other LSH
+    # signature caches.
+    m = persist_bounded(llmops.md5_minhash_signatures(d))
     bands = llmops.md5_minhash_band_rows_from_sigs(m)
     # hot-bucket cap (LSH_MAX_BUCKET discipline): a band bucket of B
     # docs emits C(B,2) candidates; mass-duplicated boilerplate

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from .. import windows as win  # noqa: F401
 from ..io import epoch_us, load_table  # noqa: F401
+from ..session import persist_bounded
 from ._core import (  # noqa: F401
     ORACLE_SQL,
     QUERIES,
@@ -212,8 +213,9 @@ def q_theil_sen_trend(spark, sf_dir):
     # counts, and bucket windows each traverse it (the branch-DAG
     # persist discipline).  Purely perf — bucket ids are a function of
     # the value, so an evicted/recomputed partition is still
-    # consistent.
-    p = p.persist()
+    # consistent — and the returned plan reads it lazily, so the
+    # bounded cache pool owns the release.
+    p = persist_bounded(p)
     ranked = win.scalable_rank(
         p, [F.col("slope")], "slope", rank_col="_grank", tot_col="_tot"
     )

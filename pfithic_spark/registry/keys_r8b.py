@@ -27,6 +27,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from .. import llmops  # noqa: F401
 from .. import windows as win  # noqa: F401
 from ..io import epoch_us, load_table  # noqa: F401
+from ..session import persist_bounded
 from ._core import (  # noqa: F401
     ORACLE_SQL,
     QUERIES,
@@ -2944,7 +2945,7 @@ def q_oov_rate(spark, sf_dir):
     ws = toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    ws = llmops._track_sig_cache(ws.persist(llmops.SIG_CACHE_LEVEL))
+    ws = persist_bounded(ws)
     pooled = ws.groupBy("w").agg(F.sum("c").cast("long").alias("cw"))
     vocab = (
         pooled.orderBy(F.col("cw").desc(), "w")

@@ -18,13 +18,19 @@ and :func:`ensure_engine_confs` cannot.  A session built elsewhere (one
 handed to ``__spark_entry__``, a notebook's) keeps Spark's default of 100
 entries, which is smaller than one Hi-C run's working set, and recompiles
 generated classes on every repeated run.
+
+Frames the engine persists while it builds a plan, and cannot release
+itself, go into one bounded pool (:func:`persist_bounded`); see
+:data:`BOUNDED_CACHE_KEEP`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 #: SQL confs that are safe (and required) to set on any session at runtime.
 RUNTIME_CONFS = {
@@ -68,6 +74,73 @@ RUNTIME_CONFS = {
 #: 1000 leaves 4x headroom over 250 for sessions that run several
 #: workloads; Metaspace stays at 159-161 MB from 100 to 1000.
 CODEGEN_CACHE_ENTRIES = 1000
+
+
+#: Frames the pool keeps persisted.  Eager-probe helpers (the
+#: scalable_* small-input count probe, equal-occupancy binning), the
+#: LSH signature and band tables and a few registry keys persist a frame
+#: while they build a plan, and the plan they return reads it lazily, so
+#: they have no point at which to release it.  The pool owns those
+#: caches: it keeps the most recent four and unpersists older ones,
+#: oldest first, so a long session never accrues executor memory.  Four
+#: keeps both frames of two interleaved pair generators (signature and
+#: band table each) warm.  Eviction is only a perf event: unpersist
+#: never invalidates a lazy result, a later read recomputes.
+BOUNDED_CACHE_KEEP = 4
+
+#: MEMORY_AND_DISK serialized: compact byte blocks instead of JVM object
+#: graphs, for lower storage memory and cheaper GC; timings flat and
+#: cached bytes strictly lower at sf0.1 (OPTIMIZATION_r14.md,
+#: tools/measure_cache_storage.py).
+_BOUNDED_CACHE_LEVEL = StorageLevel(True, True, False, False, 1)
+_bounded_caches: list[DataFrame] = []
+_bounded_lock = threading.Lock()
+
+
+def _unpersist_quietly(frames: list[DataFrame]) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+
+
+def persist_bounded(df: DataFrame) -> DataFrame:
+    """Persist ``df`` into the bounded pool and return the cached frame.
+
+    A frame the caller already persisted, or whose plan is cached
+    already (by the caller, or by a frame the pool holds), passes
+    through untouched: it reads that cache, and the cache's owner
+    releases it.  Tracked as well, the older frame's eviction would drop
+    the cache this one reads, since Spark unpersists by plan."""
+    if df.is_cached or df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist(_BOUNDED_CACHE_LEVEL)
+    with _bounded_lock:
+        _bounded_caches.append(df)
+        drop = _bounded_caches[:-BOUNDED_CACHE_KEEP]
+        del _bounded_caches[:-BOUNDED_CACHE_KEEP]
+    _unpersist_quietly(drop)
+    return df
+
+
+def release_bounded(df: DataFrame) -> None:
+    """Unpersist ``df`` now if the pool holds it; a frame the pool does
+    not hold (a caller's own cache) is left alone."""
+    with _bounded_lock:
+        try:
+            _bounded_caches.remove(df)
+        except ValueError:
+            return
+    _unpersist_quietly([df])
+
+
+def release_bounded_caches() -> None:
+    """Unpersist every frame the pool holds.  Safe at any time."""
+    with _bounded_lock:
+        drop = _bounded_caches[:]
+        _bounded_caches.clear()
+    _unpersist_quietly(drop)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

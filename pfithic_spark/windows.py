@@ -43,11 +43,12 @@ in, so they rank exactly as under a plain ``Window.orderBy``.
 
 from __future__ import annotations
 
-import threading as _threading
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from .session import persist_bounded, release_bounded
 
 
 #: Phase-2 parallelism of every two-phase helper equals the bucket
@@ -66,71 +67,24 @@ _MAX_BUCKETS = 2048
 SMALL_THRESHOLD_DEFAULT = 2_000_000
 
 
-#: Probe-input caches persisted by the scalable_* helpers.
-#: Every helper that runs an EAGER action on its input at
-#: plan-construction time — the small_threshold count probe, or
-#: _bucketed_by_value's approxQuantile boundary pass — used to
-#: re-execute the caller's full upstream lineage once per action plus
-#: once (rank helpers: twice — the window input AND the per-bucket
-#: counts subtree sit on different exchanges) inside the returned
-#: plan, because separate query executions never share shuffle stages.
-#: Persisting the input before the first eager action makes every
-#: later reference a cache read (measured min-of-5 at sf0.1:
-#: q_auc_by_group 1.98→1.38 s, q_conformal_interval 2.60→2.05 s,
-#: q_weighted_quantile 1.98→1.62 s, q_roc_auc 1.00→0.91 s,
-#: q_energy_distance 1.41→1.16 s, q_anomaly_zscore 2.37→2.09 s; the
-#: one small loss is a tiny-input caller, q_cliffs_delta
-#: 0.60→0.71 s).  Applied ONLY on the count-probe sites
-#: (:func:`_probe_small`): the same persist ahead of
-#: _bucketed_by_value's approxQuantile pass regressed the rank-based
-#: keys (see the note there).  An untracked probe cache has no safe
-#: unpersist point — the returned plan reads it lazily — and leaks
-#: across long sessions; this tracker bounds that by keeping only the
-#: most recent _PROBE_CACHE_KEEP frames (the llmops signature-cache
-#: discipline) — eviction is a perf event, never a correctness one,
-#: and release_probe_caches() frees everything on demand.
-_LIVE_PROBE_CACHES: list[DataFrame] = []
-_PROBE_CACHE_LOCK = _threading.Lock()
-_PROBE_CACHE_KEEP = 4
-
-#: Serialized MEMORY_AND_DISK for the probe caches (the
-#: llmops.SIG_CACHE_LEVEL rationale: compact byte blocks instead of JVM
-#: object graphs; timings flat at sf0.1, storage strictly lower —
-#: numbers in OPTIMIZATION_r14.md).
-from pyspark import StorageLevel as _StorageLevel
-
-_PROBE_CACHE_LEVEL = _StorageLevel(True, True, False, False, 1)
-
-
-def release_probe_caches() -> None:
-    """Unpersist probe-input caches held by the scalable_* helpers."""
-    with _PROBE_CACHE_LOCK:
-        drop, _LIVE_PROBE_CACHES[:] = _LIVE_PROBE_CACHES[:], []
-    for df in drop:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _probe_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` ahead of an eager probe action, tracked with
-    bounded keep-most-recent eviction.  A frame the CALLER already
-    persisted passes through untouched (their cache, their unpersist
-    point)."""
-    if df.is_cached:
-        return df
-    df = df.persist(_PROBE_CACHE_LEVEL)
-    with _PROBE_CACHE_LOCK:
-        _LIVE_PROBE_CACHES.append(df)
-        drop = _LIVE_PROBE_CACHES[:-_PROBE_CACHE_KEEP]
-        _LIVE_PROBE_CACHES[:] = _LIVE_PROBE_CACHES[-_PROBE_CACHE_KEEP:]
-    for old in drop:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
+# Why :func:`_probe_small` persists its input: a helper that runs an
+# EAGER action on its input at plan-construction time — the
+# small_threshold count probe, or _bucketed_by_value's approxQuantile
+# boundary pass — re-executes the caller's full upstream lineage once
+# per action plus once (rank helpers: twice — the window input AND the
+# per-bucket counts subtree sit on different exchanges) inside the
+# returned plan, because separate query executions never share shuffle
+# stages.  Persisting the input before the first eager action makes
+# every later reference a cache read (measured min-of-5 at sf0.1:
+# q_auc_by_group 1.98→1.38 s, q_conformal_interval 2.60→2.05 s,
+# q_weighted_quantile 1.98→1.62 s, q_roc_auc 1.00→0.91 s,
+# q_energy_distance 1.41→1.16 s, q_anomaly_zscore 2.37→2.09 s; the one
+# small loss is a tiny-input caller, q_cliffs_delta 0.60→0.71 s).
+# Applied ONLY on the count-probe sites: the same persist ahead of
+# _bucketed_by_value's approxQuantile pass regressed the rank-based
+# keys (see the note there).  The returned plan reads the cache lazily,
+# so there is no safe unpersist point here; the bounded pool
+# (:func:`session.persist_bounded`) owns it.
 
 
 def _probe_small(
@@ -141,30 +95,22 @@ def _probe_small(
     ``n_in``.
 
     The count is an eager action and the returned plan reads ``df``
-    again, so ``df`` is persisted first (:func:`_probe_persist`) and its
-    upstream lineage executes once; the returned frame is that cache.
-    An over-threshold frame is released at once: an input that fails
-    the probe is arbitrarily large at 100 TB, and holding it in
+    again, so ``df`` is persisted first (:func:`session.persist_bounded`)
+    and its upstream lineage executes once; the returned frame is that
+    cache.  An over-threshold frame is released at once: an input that
+    fails the probe is arbitrarily large at 100 TB, and holding it in
     MEMORY_AND_DISK until keep-4 eviction is exactly the executor
     memory/disk-pressure hazard the llmops shingle-table note declines
     a persist over — the two-phase path's re-reads of the frame are
     column-pruned scans, the cheaper price at that size.  A
-    caller-persisted frame is never in the tracker and is left alone
-    (their cache, their release point)."""
+    caller-persisted frame is not in the pool and is left alone (their
+    cache, their release point)."""
     if n_in is not None:
         return df, n_in <= threshold
-    df = _probe_persist(df)
+    df = persist_bounded(df)
     n_in = df.count()
     if n_in > threshold:
-        with _PROBE_CACHE_LOCK:
-            try:
-                _LIVE_PROBE_CACHES.remove(df)
-            except ValueError:
-                return df, False
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        release_bounded(df)
     return df, n_in <= threshold
 
 
@@ -430,7 +376,8 @@ def equal_occupancy_assign(
     """
     n_dists = None
     if small_threshold:
-        byd = byd.cache()  # reused by the agg, the cumsum and the stats
+        # reused by the agg, the cumsum and the stats
+        byd = persist_bounded(byd)
         if total is None:
             # one job for both scalars the decision needs
             n_dists, total = byd.agg(

@@ -842,3 +842,43 @@ def test_refinement_routes_equal_fragment_mode(spark, monkeypatch):
         ),
     )
     _assert_routes_equal(runs, 3)
+
+
+@pytest.mark.parametrize("contact_type", ["interOnly", "All"])
+def test_final_bh_route_counts_every_scored_row(spark, monkeypatch, contact_type):
+    """The final BH routes on every scored row, intra plus inter: with
+    hic.BH_SINGLE_WINDOW_ROWS one below the scored row count, interOnly
+    and All rank with windows.bh_fdr_scalable, and the output equals the
+    single-window run's exactly.  In both modes the intra rows alone are
+    under the bound."""
+    from pfithic_spark import hic
+    from pfithic_spark import windows as win
+
+    rng = np.random.default_rng(43)
+    chroms = [("chr1", 30), ("chr2", 24)]
+    contacts = spark.createDataFrame(
+        _tied_rows(rng, chroms, 150, inter_draws=80),
+        "chr1 string, mid1 long, chr2 string, mid2 long, contact_count long",
+    )
+    cfg = hic.SigConfig(resolution=5000, n_bins=8, passes=2, contact_type=contact_type)
+
+    def run():
+        out = hic.run_significance(spark, contacts, chroms, cfg=cfg)
+        return out.toPandas().sort_values(_KEYS, ignore_index=True)
+
+    scalable = win.bh_fdr_scalable
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return scalable(*args, **kwargs)
+
+    monkeypatch.setattr(win, "bh_fdr_scalable", spy)
+    single = run()
+    assert calls == []
+    n_inter = int((single["chr1"] != single["chr2"]).sum())
+    assert n_inter > 0
+    monkeypatch.setattr(hic, "BH_SINGLE_WINDOW_ROWS", len(single) - 1)
+    got = run()
+    assert calls == [1]
+    pd.testing.assert_frame_equal(got, single, check_exact=True)

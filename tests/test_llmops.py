@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pfithic_spark import llmops
+from pfithic_spark import llmops, session
 
 
 @pytest.fixture(scope="module")
@@ -538,7 +538,7 @@ def test_curate_cli_end_to_end(tmp_path):
 def test_unpersist_discipline(spark, sf_dir):
     """A session sweeping many corpora must not accrue executor memory:
     each LSH pair-generator call releases the previous signature cache,
-    release_signature_caches() drops the last one, and q_pagerank frees
+    release_bounded_caches() drops the last one, and q_pagerank frees
     its edge-list/degree caches after materializing (keeping only the
     node-sized checkpoint)."""
     jsc = spark.sparkContext._jsc
@@ -555,9 +555,9 @@ def test_unpersist_discipline(spark, sf_dir):
     # GROWTH bounds only (never equality-to-baseline: the baseline may
     # include checkpoint RDDs from earlier tests that the background
     # ContextCleaner releases mid-test, dropping the count below base).
-    # At most the _SIG_CACHE_KEEP most recent caches survive the sweep:
-    assert n_persistent() <= base + llmops._SIG_CACHE_KEEP
-    llmops.release_signature_caches()
+    # At most the BOUNDED_CACHE_KEEP most recent caches survive the sweep:
+    assert n_persistent() <= base + session.BOUNDED_CACHE_KEEP
+    session.release_bounded_caches()
     assert n_persistent() <= base
     import __spark_entry__ as e
 

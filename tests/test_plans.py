@@ -267,22 +267,23 @@ def test_probe_cache_released_when_over_threshold(spark):
     arbitrarily large — must be unpersisted immediately instead of
     squatting in MEMORY_AND_DISK until keep-4 eviction.  Only
     confirmed-small frames stay cached."""
+    from pfithic_spark import session
     from pfithic_spark import windows as win
 
-    win.release_probe_caches()
+    session.release_bounded_caches()
     small = spark.range(100).select(
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
     win.scalable_cumsum(small, "d", {"run": "v"}, small_threshold=1000)
-    assert len(win._LIVE_PROBE_CACHES) == 1
-    assert win._LIVE_PROBE_CACHES[0].is_cached
-    win.release_probe_caches()
+    assert len(session._bounded_caches) == 1
+    assert session._bounded_caches[0].is_cached
+    session.release_bounded_caches()
 
     big = spark.range(5000).select(
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
     out = win.scalable_cumsum(big, "d", {"run": "v"}, small_threshold=1000)
-    assert win._LIVE_PROBE_CACHES == [], "over-threshold frame must be released"
+    assert session._bounded_caches == [], "over-threshold frame must be released"
     # the two-phase path still computes correctly after the release
     got = {
         r["d"]: r["run"]

@@ -323,6 +323,11 @@ def main() -> None:
     args = ap.parse_args()
     if args.keys and not (args.out and args.suffix):
         ap.error("--keys needs --out and --suffix")
+    if not os.path.isdir(args.sf_dir):
+        ap.error(
+            f"no fixture directory at {args.sf_dir}; pass sf_dir, the "
+            "directory holding the fixture parquet tables"
+        )
 
     from pfithic_spark.session import get_spark
 
